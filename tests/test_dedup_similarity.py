@@ -89,6 +89,74 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert len(exact) >= 8
 
 
+@pytest.mark.parametrize("bands", [0, 10, 128])
+def test_lsh_bands_must_divide_num_hashes(spark, bands):
+    """bands > num_hashes gives 0 rows per band (every doc shares
+    every band's "" bucket, which the bucket guard then drops — all
+    pairs silently lost), and a remainder leaves trailing hashes
+    unused: both raise instead."""
+    from textalyzer_spark.operators.incremental import (
+        incremental_minhash_pairs,
+        minhash_catalog,
+    )
+
+    df = _near_dup_corpus(spark)
+    with pytest.raises(ValueError, match="bands must divide num_hashes"):
+        minhash_lsh_pairs(df, k=3, num_hashes=64, bands=bands)
+    catalog = minhash_catalog(df, k=3, num_hashes=64)
+    with pytest.raises(ValueError, match="bands must divide num_hashes"):
+        incremental_minhash_pairs(df, catalog, k=3, num_hashes=64, bands=bands)
+
+
+def test_minhash_signature_kernels_agree(spark):
+    """A catalog mixes signatures from the signature-only kernel
+    (minhash_catalog) with those of the shingle+signature kernel
+    (shingle_signatures, minhash_component_catalog): both must give
+    the identical signature for every doc with >= k tokens, and no
+    row for shorter docs. Short docs, repeated shingles and non-ASCII
+    tokens included."""
+    from textalyzer_spark.functions.tokenize import tokenize_text
+    from textalyzer_spark.operators.dedup import shingle_signatures
+    from textalyzer_spark.operators.incremental import (
+        minhash_catalog,
+        minhash_component_catalog,
+    )
+
+    texts = [
+        "",
+        "solo",
+        "two words",
+        "exactly three words",
+        "la la la la la la la la",  # one distinct shingle, repeated
+        "the cat sat on the mat the cat sat on the mat again",
+        "Ça déjà vu — naïve café Größe straße ΣΊΣΥΦΟΣ",
+        "日本語 の テキスト も 同じ 署名 に なる べき",
+        "emoji 🙂 tokens 🙂 repeat 🙂 tokens 🙂 repeat",
+        "the cat sat on the mat the cat sat on the rug again",
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"
+    )
+    k, nh = 3, 16
+    want_ids = {i for i, t in enumerate(texts) if len(tokenize_text(t)) >= k}
+    assert 0 < len(want_ids) < len(texts)
+
+    def sig_map(frame):
+        return {
+            r["doc_id"]: list(r["signature"])
+            for r in frame.collect()
+            if r["signature"] is not None
+        }
+
+    only = sig_map(minhash_catalog(df, k=k, num_hashes=nh))
+    built = sig_map(shingle_signatures(df, k=k, num_hashes=nh).signatures)
+    comp = sig_map(
+        minhash_component_catalog(df, k=k, num_hashes=nh, bands=4)
+    )
+    assert set(only) == want_ids
+    assert only == built == comp
+
+
 def test_simhash_properties(spark):
     df = spark.createDataFrame(
         [
@@ -587,13 +655,9 @@ def test_minhash_kernels_tolerate_all_short_doc_batches(spark):
         [(1, "a b"), (2, ""), (3, "x")], "doc_id bigint, text string"
     )
     assert dd.minhash_signatures(docs, k=3, num_hashes=8).count() == 0
-    assert (
-        dd._distinct_shingles(
-            docs, 3, "doc_id", "text", with_base_hash=True,
-            sig_params=(8, 42),
-        ).count()
-        == 0
-    )
+    built = dd.shingle_signatures(docs, k=3, num_hashes=8)
+    assert built.shingles.count() == 0
+    assert built.signatures.count() == 0
     assert dd.minhash_lsh_pairs(docs, k=3, num_hashes=16, bands=4).count() == 0
 
 

@@ -142,29 +142,6 @@ def test_embedding_near_dup_joins_block_table(spark):
         "CartesianProduct" in plan  # scorer above the join
 
 
-def test_minhash_signatures_from_shingles_stay_jvm_side(spark, docs):
-    """minhash_lsh's signature derivation runs entirely inside the JVM
-    (md5-LE8 + affine MIN aggregates): no Python stage in the plan,
-    and partial (map-side) aggregation so the shuffle carries per-doc
-    partials, not per-shingle rows — the property that makes one
-    shared shingle pass cheaper than a second Python corpus pass."""
-    from textalyzer_spark.operators.dedup import (
-        _distinct_shingles,
-        _signatures_from_shingles,
-    )
-
-    sh = _distinct_shingles(docs, 3, "doc_id", "text")
-    q = _signatures_from_shingles(sh, 8, 42)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # exactly ONE python stage: the shared Arrow shingle expansion —
-    # the md5/affine/min signature math above it is pure JVM
-    assert plan.count("MapInPandas") == 1
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # two HashAggregates around the exchange = partial + final
-    assert plan.count("HashAggregate") >= 2
-    assert "md5" in plan
-
-
 def test_contamination_broadcasts_benchmark(spark, docs):
     """The benchmark shingle set must broadcast (no SortMergeJoin
     anywhere): benchmarks are thousands of docs, the corpus 10^12 —

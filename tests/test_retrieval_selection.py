@@ -248,7 +248,7 @@ def test_dsir_kernel_histogram_matches_explode_hash_groupby(spark):
     bucket) count — the python/JVM hash identity pinned for
     dsir_score_stateless, applied one stage earlier. Includes a
     unicode-whitespace doc (NBSP must NOT split: WS_SPLIT parity)."""
-    from textalyzer_spark.operators.dedup import _md5_le8_col
+    from textalyzer_spark.functions.hashing import md5_le8_col
     from textalyzer_spark.operators.selection import (
         _doc_bucket_counts,
         _doc_features,
@@ -273,7 +273,7 @@ def test_dsir_kernel_histogram_matches_explode_hash_groupby(spark):
         .select(
             "doc_id",
             "is_target",
-            F.pmod(_md5_le8_col(F.col("feat")), F.lit(nb))
+            F.pmod(md5_le8_col(F.col("feat")), F.lit(nb))
             .cast("long")
             .alias("bucket"),
         )

@@ -10,7 +10,7 @@ from textalyzer_spark.corpus import build_spans, nested_from_flat, nested_from_t
 from textalyzer_spark.operators.frequency import word_frequency
 from textalyzer_spark.operators.spans import (
     process_spans,
-    process_spans_exploded,
+    process_spans_arrow,
     span_word_frequency,
 )
 
@@ -58,44 +58,28 @@ def test_span_sequence_equality(spark):
 def test_span_sequence_equality_distributed(spark):
     # same invariant via the distributed mapInPandas synthesis path,
     # with a repartition in between to force a real shuffle, through
-    # the explode→reassemble variant (the order-survival proof)
+    # the production mapInArrow variant
     flat = spark.createDataFrame(list(TEXTS.items()), "doc_id string, text string")
     nested = nested_from_flat(flat).repartition(7)
-    out = process_spans_exploded(nested).collect()
+    out = process_spans_arrow(nested).collect()
     assert _seq(out) == _seq(nested.collect())
 
 
 def test_all_variants_agree(spark):
-    from textalyzer_spark.operators.spans import (
-        process_spans_arrow,
-        process_spans_fused,
-    )
-
     nested = nested_from_texts(spark, TEXTS)
     cols = ["doc_id", "n_text_spans", "n_media_spans", "n_tokens", "n_syllables"]
     a = {tuple(r[c] for c in cols) for r in process_spans(nested).collect()}
-    b = {tuple(r[c] for c in cols) for r in process_spans_exploded(nested).collect()}
-    c = {tuple(r[c] for c in cols) for r in process_spans_fused(nested).collect()}
     d = {
         tuple(r[c] for c in cols)
         for r in process_spans(nested, use_pandas_udf=False).collect()
     }
     e = {tuple(r[c] for c in cols) for r in process_spans_arrow(nested).collect()}
-    assert a == b == c == d == e
+    assert a == d == e
 
 
 def test_arrow_span_sequence_equality(spark):
-    from textalyzer_spark.operators.spans import process_spans_arrow
-
     nested = nested_from_texts(spark, TEXTS)
     assert _seq(process_spans_arrow(nested).collect()) == _seq(nested.collect())
-
-
-def test_fused_span_sequence_equality(spark):
-    from textalyzer_spark.operators.spans import process_spans_fused
-
-    nested = nested_from_texts(spark, TEXTS)
-    assert _seq(process_spans_fused(nested).collect()) == _seq(nested.collect())
 
 
 def test_span_metrics(spark):

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from textalyzer_spark.formatting import duplication_json, frequency_json
+from textalyzer_spark.formatting import duplication_json
 
 
 def get_freq_map(spark: SparkSession, text: str) -> dict[str, int]:
@@ -21,11 +21,6 @@ def get_freq_map(spark: SparkSession, text: str) -> dict[str, int]:
 
     df = spark.createDataFrame([("textarea", text)], "doc_id string, text string")
     return {r["word"]: r["count"] for r in word_frequency(df).collect()}
-
-
-def get_freq_json(spark: SparkSession, text: str) -> str:
-    """JSON form, sorted (count desc, word asc) like lib.rs:41-49."""
-    return frequency_json(list(get_freq_map(spark, text).items()))
 
 
 def get_dup_lines(spark: SparkSession, text: str) -> str:

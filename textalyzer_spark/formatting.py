@@ -4,8 +4,6 @@ reference's terminal renderers, used for golden-output tests.
 * frequency bars — /root/reference/textalyzer/src/frequency.rs:46-91
   (right-aligned word and count columns, two-space gutters, '▆' bars
   scaled into the space left of an 80-column line, f32 rounding)
-* line-length histogram — /root/reference/textalyzer/src/line_length.rs:39-91
-  (Length/Count/Histogram header, dashes, 60-column f64-rounded bars)
 
 The engine's contract is the DataFrame/JSON shapes; these formatters
 exist so the reference's e2e golden (239,902 bytes of histogram
@@ -22,7 +20,6 @@ import numpy as np
 from textalyzer_spark.functions.width import str_display_width
 
 MAX_LINE_LENGTH = 80
-MAX_BAR = 60
 BAR = "▆"
 
 
@@ -48,28 +45,6 @@ def format_freq_map(rows: list[tuple[str, int]]) -> str:
         bar_w = _round_half_away(float(rem32 / high32 * np.float32(count)))
         pad_w = max_word_w - str_display_width(word)
         out.append(f"{' ' * pad_w}{word}  {str(count).rjust(max_num_w)}  {BAR * bar_w}\n")
-    return "".join(out)
-
-
-def format_line_length_histogram(rows: list[tuple[int, int]]) -> str:
-    """Render (length, count) rows sorted by length asc
-    (line_length.rs:39-91)."""
-    if not rows:
-        return "No lines found to analyze."
-    rows = sorted(rows)
-    max_length = rows[-1][0]
-    max_count = max(c for _, c in rows)
-    lw = len(str(max_length))
-    cw = len(str(max_count))
-    out = [
-        f"{'Length'.rjust(lw)}  {'Count'.rjust(cw)}  Histogram\n",
-        f"{'-' * lw}  {'-' * cw}  {'-' * 9}\n",
-    ]
-    for length, count in rows:
-        bar_w = _round_half_away(MAX_BAR * (count / max_count)) if max_count else 0
-        out.append(
-            f"{str(length).rjust(lw)}  {str(count).rjust(cw)}  {BAR * bar_w}\n"
-        )
     return "".join(out)
 
 

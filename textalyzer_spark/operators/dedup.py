@@ -14,9 +14,13 @@ higher-order-function versions ran interpreted and ~20-50x slower).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Collection
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from textalyzer_spark.functions.hashing import md5_le8
 from textalyzer_spark.operators.shingles import doc_shingles
 
 # Mersenne prime 2^31-1: the base hash is reduced mod p BEFORE the
@@ -44,7 +48,6 @@ def _distinct_shingles(
     k: int,
     id_col: str,
     text_col: str,
-    with_base_hash: bool = False,
     sig_params: tuple[int, int] | None = None,
 ) -> DataFrame:
     """DISTINCT ``(doc_id, shingle)`` — deduplicated IN THE KERNEL:
@@ -54,45 +57,26 @@ def _distinct_shingles(
     the winnow-fingerprint discipline). Multiset-identical to
     ``doc_shingles(...).distinct()``.
 
-    ``with_base_hash=True`` additionally emits ``x`` = the minhash
-    base hash ``md5-LE8(shingle) mod p`` — hashlib.md5 here costs
-    microseconds per batch, while the JVM twin (md5 → 8 hex
-    substrings → concat → conv(16,10) → decimal → pmod,
-    ``_md5_le8_col``) dominated the signature aggregation (round-8
-    profile: ~0.8 s of the 1.9 s minhash pair chain at sf0.1).
-    Identical values by the md5-LE8 == md5_number_upper identity.
-
     ``sig_params=(num_hashes, seed)`` additionally emits ONE
-    signature row per document (``shingle``/``x`` NULL,
-    ``signature`` = the minhash affine-min vector, computed in-kernel
-    exactly as :func:`minhash_signatures` does) interleaved with the
-    shingle rows — one kernel pass and ONE materialization replace
-    the kernel pass + a separate affine-min aggregation shuffle
-    (round 8: at bench scale these composition gates are bounded by
-    job/barrier count, not data). Slice consumers with
-    ``shingle IS [NOT] NULL``. Values identical to
-    :func:`_signatures_from_shingles` over the shingle slice (same
-    base hash mod p, same affine params, min over the same distinct
-    set — the identity already pinned for minhash_signatures)."""
-    import hashlib
+    signature row per document (``shingle`` NULL, ``signature`` = the
+    minhash vector from :func:`_signature_fn`, the same math
+    :func:`minhash_signatures` runs) interleaved with the shingle
+    rows — one kernel pass and ONE materialization carry both the
+    exact-verify shingles and the band-cut signatures (round 8: at
+    bench scale these composition gates are bounded by job/barrier
+    count, not data). :func:`shingle_signatures` materializes and
+    slices that output; use it rather than slicing by hand."""
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
     from textalyzer_spark.functions.tokenize import tokenize_text
 
-    if sig_params is not None:
-        num_hashes, seed = sig_params
-        av, bv = _hash_params(num_hashes, seed)
-        a_arr = np.asarray(av, dtype=np.uint64)
-        b_arr = np.asarray(bv, dtype=np.uint64)
-        p_mod = np.uint64(_P)
+    sig = _signature_fn(*sig_params) if sig_params is not None else None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, shingles = [], []
-            xs: list[int] = []
             sig_ids, sig_vals = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
                 toks = tokenize_text(text or "")
@@ -104,55 +88,73 @@ def _distinct_shingles(
                 )
                 ids.extend([doc_id] * len(ss))
                 shingles.extend(ss)
-                if with_base_hash or sig_params is not None:
-                    doc_xs = [
-                        int.from_bytes(
-                            hashlib.md5(s.encode()).digest()[:8], "little"
-                        )
-                        % _P
-                        for s in ss
-                    ]
-                    if with_base_hash:
-                        xs.extend(doc_xs)
-                    if sig_params is not None:
-                        base = np.asarray(doc_xs, dtype=np.uint64)
-                        # a*(x mod p)+b < 2^62 — exact in uint64
-                        perms = (
-                            base[:, None] * a_arr[None, :] + b_arr[None, :]
-                        ) % p_mod
-                        sig_ids.append(doc_id)
-                        sig_vals.append(
-                            perms.min(axis=0).astype(np.int64).tolist()
-                        )
-            out: dict = {"doc_id": ids, "shingle": shingles}
-            if with_base_hash:
-                out["x"] = pd.Series(xs, dtype="int64")
-            if sig_params is not None:
-                # object dtypes throughout: an all-short-doc batch
-                # yields empty lists, and pandas' default float64
-                # empty column is not Arrow-convertible to
-                # list<int64> (same guard as minhash_signatures)
-                n_sh, n_sig = len(ids), len(sig_ids)
-                out["doc_id"] = pd.Series(ids + sig_ids, dtype="object")
-                out["shingle"] = pd.Series(
-                    shingles + [None] * n_sig, dtype="object"
-                )
-                if with_base_hash:
-                    out["x"] = pd.Series(
-                        xs + [None] * n_sig, dtype="object"
-                    )
-                out["signature"] = pd.Series(
-                    [None] * n_sh + sig_vals, dtype="object"
-                )
-            yield pd.DataFrame(out)
+                if sig is not None:
+                    sig_ids.append(doc_id)
+                    sig_vals.append(sig(ss))
+            if sig is None:
+                yield pd.DataFrame({"doc_id": ids, "shingle": shingles})
+                continue
+            # object dtypes throughout: an all-short-doc batch yields
+            # empty lists, and pandas' default float64 empty column is
+            # not Arrow-convertible to list<int64> (same guard as
+            # minhash_signatures)
+            n_sh, n_sig = len(ids), len(sig_ids)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids + sig_ids, dtype="object"),
+                    "shingle": pd.Series(
+                        shingles + [None] * n_sig, dtype="object"
+                    ),
+                    "signature": pd.Series(
+                        [None] * n_sh + sig_vals, dtype="object"
+                    ),
+                }
+            )
 
     id_type = dict(df.dtypes).get(id_col, "string")
     schema = f"doc_id {id_type}, shingle string"
-    if with_base_hash:
-        schema += ", x bigint"
-    if sig_params is not None:
+    if sig is not None:
         schema += ", signature array<bigint>"
     return df.select(id_col, text_col).mapInPandas(run, schema)
+
+
+class ShingleSignatures(NamedTuple):
+    """One materialized shingle+signature build of a corpus (see
+    :func:`shingle_signatures`)."""
+
+    #: DISTINCT ``(doc_id, shingle)`` — the exact-verify side
+    shingles: DataFrame
+    #: ``(doc_id, signature array<bigint>)`` — one row per doc with at
+    #: least k tokens, the band-cut side
+    signatures: DataFrame
+
+
+def shingle_signatures(
+    df: DataFrame,
+    k: int = 3,
+    num_hashes: int = 64,
+    seed: int = 42,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> ShingleSignatures:
+    """ONE tokenize+shingle kernel pass, materialized once
+    (localCheckpoint), sliced into the distinct-shingle rows and the
+    per-doc signature rows. Every consumer — the band cut, exact
+    verify, a stored signature catalog, a cross-catalog band join —
+    reads this checkpoint instead of re-running the kernel. Signatures
+    are value-identical to :func:`minhash_signatures` (same
+    :func:`_signature_fn`)."""
+    raw = _distinct_shingles(
+        df, k, id_col, text_col, sig_params=(num_hashes, seed)
+    ).localCheckpoint()
+    return ShingleSignatures(
+        shingles=raw.filter(F.col("shingle").isNotNull()).select(
+            "doc_id", "shingle"
+        ),
+        signatures=raw.filter(F.col("shingle").isNull()).select(
+            "doc_id", "signature"
+        ),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -235,6 +237,31 @@ def _hash_params(num_hashes: int, seed: int) -> tuple[list[int], list[int]]:
     )
 
 
+def _signature_fn(
+    num_hashes: int, seed: int
+) -> Callable[[Collection[str]], list[int]]:
+    """``sig(shingles) -> list[int]``: the MinHash signature of one
+    document's DISTINCT shingle set — the one place the signature math
+    lives (both Arrow kernels call it). Base hash = md5-LE8 (the
+    engine's cross-engine hash, functions/hashing.py) reduced mod p,
+    then ``num_hashes`` affine permutations as one (shingles x hashes)
+    uint64 matrix, min along axis 0."""
+    import numpy as np
+
+    av, bv = _hash_params(num_hashes, seed)
+    a_arr = np.asarray(av, dtype=np.uint64)
+    b_arr = np.asarray(bv, dtype=np.uint64)
+    p_mod = np.uint64(_P)
+
+    def sig(shingles: Collection[str]) -> list[int]:
+        base = np.asarray([md5_le8(s) % _P for s in shingles], dtype=np.uint64)
+        # (n_shingles, num_hashes): a*(x mod p)+b < 2^62, exact
+        perms = (base[:, None] * a_arr[None, :] + b_arr[None, :]) % p_mod
+        return perms.min(axis=0).astype(np.int64).tolist()
+
+    return sig
+
+
 def minhash_signatures(
     df: DataFrame,
     k: int = 3,
@@ -243,15 +270,13 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """``(doc_id, signature array<bigint>)`` — MinHash over k-shingles.
+    """``(doc_id, signature array<bigint>)`` — MinHash over k-shingles,
+    one row per doc with at least ``k`` tokens.
 
-    Arrow-batched numpy implementation: shingle base hashes (the
-    first 8 md5 digest bytes, little-endian — deterministic across
-    workers, and equal to DuckDB's ``md5_number_upper`` so the LSH
-    pipeline has a value-exact SQL oracle; python's builtin hash()
-    is salted per process and MUST NOT be used) reduced mod p, then
-    x num_hashes affine permutations as one (shingles x hashes)
-    uint64 matrix, min along axis 0.
+    Arrow-batched: one kernel pass tokenizes, shingles and applies
+    :func:`_signature_fn` per doc — the signature-only twin of the
+    :func:`shingle_signatures` kernel, for callers that need no
+    shingle table (catalog builds, streaming).
 
     A pure-Catalyst formulation (transform + array_min per
     permutation) was tried first: higher-order-function lambdas
@@ -259,22 +284,13 @@ def minhash_signatures(
     for 5.8M modular ops at sf0.1; this batch pass is ~50x faster.
     No shuffle either way; scales linearly with corpus size.
     """
-    import hashlib
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
     from textalyzer_spark.functions.tokenize import tokenize_text
 
-    av, bv = _hash_params(num_hashes, seed)
-    a_arr = np.asarray(av, dtype=np.uint64)
-    b_arr = np.asarray(bv, dtype=np.uint64)
-    p_mod = np.uint64(_P)
-
-    def base_hash64(s: str) -> int:
-        # == DuckDB md5_number_upper(s): first 8 digest bytes, LE
-        return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "little")
+    sig = _signature_fn(num_hashes, seed)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -283,19 +299,13 @@ def minhash_signatures(
                 toks = tokenize_text(text or "")
                 if len(toks) < k:
                     continue
-                shingles = {
-                    " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
-                }
-                base = (
-                    np.asarray(
-                        [base_hash64(s) for s in shingles], dtype=np.uint64
-                    )
-                    % p_mod
-                )
-                # (n_shingles, num_hashes): a*(x mod p)+b < 2^62, exact
-                perms = (base[:, None] * a_arr[None, :] + b_arr[None, :]) % p_mod
                 doc_ids.append(doc_id)
-                sigs.append(perms.min(axis=0).astype(np.int64).tolist())
+                sigs.append(
+                    sig({
+                        " ".join(toks[i : i + k])
+                        for i in range(len(toks) - k + 1)
+                    })
+                )
             # explicit object dtype: a non-empty batch whose docs are
             # ALL too short yields empty lists, and pandas' default
             # float64 empty column is not Arrow-convertible to
@@ -312,53 +322,18 @@ def minhash_signatures(
     return df.mapInPandas(run, f"doc_id {id_type}, signature array<bigint>")
 
 
-def _md5_le8_col(c) -> "F.Column":
-    """JVM column: ``int.from_bytes(md5(s).digest()[:8], "little")``
-    — the engine's cross-engine base hash (== DuckDB
-    ``md5_number_upper``), computed INSIDE whole-stage codegen: the
-    first 8 digest bytes are the first 16 hex chars of ``md5()``,
-    byte-reversed, then ``conv(_, 16, 10)`` (unsigned 64-bit) read
-    exactly via decimal(20,0)."""
-    h = F.md5(c)
-    le = F.concat(*[F.substring(h, i, 2) for i in (15, 13, 11, 9, 7, 5, 3, 1)])
-    return F.conv(le, 16, 10).cast("decimal(20,0)")
-
-
-def _signatures_from_shingles(
-    sh: DataFrame, num_hashes: int, seed: int
-) -> DataFrame:
-    """``(doc_id, signature array<bigint>)`` from a DISTINCT
-    ``(doc_id, shingle)`` table, entirely JVM-side: base = md5-LE8
-    mod p (codegen), then ``num_hashes`` affine mins as one groupBy
-    with ``num_hashes`` MIN aggregates — partial (map-side) aggregation
-    means the shuffle carries one row per (partition, doc), not per
-    shingle. Identical values to :func:`minhash_signatures` (same
-    base hash, same affine params, min over the same distinct-shingle
-    set) — but when the shingle table is ALSO needed for exact verify
-    (minhash_lsh_pairs), this path reuses it instead of re-running
-    the whole tokenize+shingle pass in python."""
-    av, bv = _hash_params(num_hashes, seed)
-    # prefer the kernel-computed base hash when the shingle table
-    # carries it (with_base_hash=True) — same values, none of the
-    # hex-conv-decimal chain per row
-    if "x" in sh.columns:
-        based = sh.select("doc_id", "x")
-    else:
-        x = F.pmod(_md5_le8_col(F.col("shingle")), F.lit(_P)).cast("bigint")
-        based = sh.select("doc_id", x.alias("x"))
-    # x < 2^31 and a < 2^31, so a*x + b < 2^62 — exact in ANSI bigint
-    aggs = [
-        F.min((F.col("x") * F.lit(av[i]) + F.lit(bv[i])) % F.lit(_P)).alias(
-            f"_s{i}"
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature values per LSH band. ``bands`` must cut ``num_hashes``
+    into equal bands of at least one row: with ``bands > num_hashes``
+    the rows would be 0 and every doc would share every band's ``""``
+    bucket (the bucket guard then drops every pair), and a remainder
+    would leave the trailing hashes silently unused."""
+    if bands < 1 or num_hashes < bands or num_hashes % bands:
+        raise ValueError(
+            f"bands must divide num_hashes into bands of >= 1 row: "
+            f"num_hashes={num_hashes}, bands={bands}"
         )
-        for i in range(num_hashes)
-    ]
-    return based.groupBy("doc_id").agg(*aggs).select(
-        "doc_id",
-        F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias(
-            "signature"
-        ),
-    )
+    return num_hashes // bands
 
 
 def _band_buckets(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -394,32 +369,22 @@ def minhash_lsh_pairs(
     max_bucket_docs: int | None = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingles: DataFrame | None = None,
-    buckets: DataFrame | None = None,
-    sigs: DataFrame | None = None,
+    shingle_sigs: ShingleSignatures | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, exact-verified:
-    ``(doc_a, doc_b, jaccard)``. ``shingles=`` accepts an ALREADY
-    MATERIALIZED distinct ``(doc_id, shingle)`` table so a caller
-    that also needs signatures (incremental component maintenance)
-    pays for one tokenize+shingle pass, not two; ``buckets=`` an
-    ALREADY MATERIALIZED ``(doc_id, band, bucket)`` table (the
-    ``_band_buckets`` cut of the same signatures) so that caller's
-    cross band join and this intra join share ONE signature
-    aggregation + band explode (round 8); ``sigs=`` an ALREADY
-    MATERIALIZED ``(doc_id, signature)`` table — the band cut then
-    derives from the checkpoint as a cheap narrow explode per
-    consumer (no bucket checkpoint), and the caller's other signature
-    consumers (catalog join, estimator attach) read the same
-    materialization instead of re-running the affine-min aggregation
-    (round 8: the agg ran twice per catalog build).
+    ``(doc_a, doc_b, jaccard)``. ``shingle_sigs=`` accepts the
+    caller's :func:`shingle_signatures` build of ``df`` (same ``k``,
+    ``num_hashes``, ``seed``) so a caller that also needs the
+    signatures (incremental component maintenance) pays for one
+    kernel pass and one materialization, not two.
 
     Candidate generation: signatures are cut into ``bands`` bands of
-    ``num_hashes/bands`` rows; docs colliding in any band's bucket
-    become candidates (bucket join — no all-pairs self-join).
-    Candidates are then verified with exact shingle Jaccard, so
-    precision is exact and only recall depends on the S-curve
-    1-(1-t^r)^b. With 64 hashes / 16 bands (r=4), t=0.5 → ~0.93 recall.
+    ``num_hashes/bands`` rows (``bands`` must divide ``num_hashes``);
+    docs colliding in any band's bucket become candidates (bucket
+    join — no all-pairs self-join). Candidates are then verified with
+    exact shingle Jaccard, so precision is exact and only recall
+    depends on the S-curve 1-(1-t^r)^b. With 64 hashes / 16 bands
+    (r=4), t=0.5 → ~0.93 recall.
 
     ``max_bucket_docs`` (default ON) skips band buckets holding more
     than that many documents — the LSH mega-bucket guard: a
@@ -431,57 +396,26 @@ def minhash_lsh_pairs(
     inside such quadratic-by-construction families; ``None`` restores
     unguarded recall.
     """
-    rows = num_hashes // bands
-    # ONE tokenize+shingle pass over the corpus: the distinct-shingle
-    # table feeds BOTH the signatures (JVM md5 + affine-min groupBy)
-    # and the exact-verify joins below. The previous shape ran the
-    # python minhash stage AND the shingle materialization — two full
-    # passes over every byte of the corpus.
-    if shingles is not None:
-        sh = shingles
-    else:
-        # ONE kernel pass + ONE materialization carries both the
-        # distinct-shingle rows (for exact verify) and one in-kernel
-        # signature row per doc (for the band cut) — the separate
-        # affine-min aggregation shuffle + its own checkpoint are gone
-        # (round 8: these gates are bounded by job/barrier count at
-        # bench scale, and at cluster scale it is one less pass over
-        # the derived shingle table)
-        raw = _distinct_shingles(
-            df, k, id_col, text_col, with_base_hash=True,
-            sig_params=(num_hashes, seed),
-        ).localCheckpoint()
-        sh = raw.filter(F.col("shingle").isNotNull()).select(
-            "doc_id", "shingle", "x"
+    rows = _rows_per_band(num_hashes, bands)
+    # ONE kernel pass + ONE materialization carries both the
+    # distinct-shingle rows (for exact verify) and one in-kernel
+    # signature row per doc (for the band cut)
+    if shingle_sigs is None:
+        shingle_sigs = shingle_signatures(
+            df, k, num_hashes, seed, id_col, text_col
         )
-        if sigs is None and buckets is None:
-            sigs = raw.filter(F.col("shingle").isNull()).select(
-                "doc_id", "signature"
-            )
-    if buckets is None and sigs is not None:
-        # caller- or kernel-materialized signatures: each bucket
-        # consumer (guard, both join sides) re-derives the band
-        # explode from the checkpoint slice — a narrow derive,
-        # measured equal to a bucket checkpoint (round-8 A/B) with
-        # one less materialization held in memory.
-        # bucket key = the band's signature values joined as a string —
-        # NOT re-hashed (xxhash64 has no cross-engine twin, and the key
-        # is bounded at rows x ~10 digits, so the shuffle-width win of
-        # an 8-byte rehash is marginal; equality semantics are
-        # identical minus a ~2^-64 collision false-positive the
-        # exact-verify stage would kill anyway)
-        buckets = _band_buckets(sigs, bands, rows)
-    elif buckets is None:
-        # caller passed a bare shingle table with no signatures: the
-        # JVM affine-min aggregation derives them, materialized as a
-        # bucket checkpoint — without it each bucket consumer re-runs
-        # the aggregation (A/B'd in round 8: dropping this checkpoint
-        # and relying on ReusedExchange measured 2.2 -> ~5 s on
-        # minhash_lsh at sf0.1 — the broadcast-join plan shape at
-        # this scale gives Catalyst no identical Exchange pair to
-        # reuse)
-        jsigs = _signatures_from_shingles(sh, num_hashes, seed)
-        buckets = _band_buckets(jsigs, bands, rows).localCheckpoint()
+    sh = shingle_sigs.shingles
+    # each bucket consumer (guard, both join sides) re-derives the band
+    # explode from the signature checkpoint — a narrow derive, measured
+    # equal to a bucket checkpoint (round-8 A/B) with one less
+    # materialization held in memory.
+    # bucket key = the band's signature values joined as a string —
+    # NOT re-hashed (xxhash64 has no cross-engine twin, and the key
+    # is bounded at rows x ~10 digits, so the shuffle-width win of
+    # an 8-byte rehash is marginal; equality semantics are
+    # identical minus a ~2^-64 collision false-positive the
+    # exact-verify stage would kill anyway)
+    buckets = _band_buckets(shingle_sigs.signatures, bands, rows)
     if max_bucket_docs is not None:
         ok = (
             buckets.groupBy("band", "bucket")
@@ -716,7 +650,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     interpreted (~13M ops in 8s at sf0.1); this is ~20x faster. No
     shuffle either way.
     """
-    import hashlib
     from collections.abc import Iterator
 
     import numpy as np
@@ -724,11 +657,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
 
     from textalyzer_spark.functions.tokenize import tokenize_text
 
-    def tok_hash64(tok: str) -> int:
-        # == DuckDB md5_number_upper(tok): first 8 digest bytes, LE
-        return int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "little")
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # per-token memo: md5-LE8 is computed once per distinct token
         cache: dict[str, int] = {}
         for pdf in batches:
             doc_ids, hashes = [], []
@@ -738,10 +668,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
                 if not toks:
                     hashes.append(0)
                     continue
-                hs = np.asarray(
-                    [cache.setdefault(t, tok_hash64(t)) for t in toks],
-                    dtype=np.uint64,
-                )
+                for t in toks:
+                    if t not in cache:
+                        cache[t] = md5_le8(t)
+                hs = np.asarray([cache[t] for t in toks], dtype=np.uint64)
                 bits = np.unpackbits(
                     hs.view(np.uint8).reshape(-1, 8)[:, ::-1], axis=1
                 ).astype(np.int32)

@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from textalyzer_spark.operators.dedup import (
     _band_buckets,
-    _distinct_shingles,
+    _rows_per_band,
+    shingle_signatures,
 )
 
 
@@ -98,10 +99,11 @@ def minhash_catalog(
 ) -> DataFrame:
     """``(doc_id, signature array<bigint>)`` snapshot catalog —
     num_hashes ints per doc: the only state the incremental path ever
-    needs. Computed by the in-kernel Arrow path
-    (:func:`~textalyzer_spark.operators.dedup.minhash_signatures` —
-    value-identical to the JVM ``_signatures_from_shingles`` pipeline
-    by the pinned md5-LE8 identity): a catalog-only caller needs no
+    needs. Computed by
+    :func:`~textalyzer_spark.operators.dedup.minhash_signatures`, the
+    signature-only kernel — value-identical to the signatures of
+    :func:`~textalyzer_spark.operators.dedup.shingle_signatures` (one
+    shared signature function): a catalog-only caller needs no
     shingle table, so the single kernel pass with NO aggregation
     shuffle is the minimal shape (round 8)."""
     from textalyzer_spark.operators.dedup import minhash_signatures
@@ -150,23 +152,18 @@ def _cross_pairs_from_sigs(
     bands: int,
     threshold: float,
     max_bucket_docs: int | None,
-    new_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """The band-join + signature-agreement core of
     :func:`incremental_minhash_pairs`, over ALREADY MATERIALIZED new
     signatures — shared with the component-maintenance path so one
-    signature build feeds both intra and cross edges. ``new_buckets=``
-    accepts the batch's already-materialized ``_band_buckets`` table
-    (shared with the intra join — round 8)."""
-    rows = num_hashes // bands
+    signature build feeds both intra and cross edges."""
+    rows = _rows_per_band(num_hashes, bands)
     # component catalogs carry NULL signatures for shingle-less docs
     # (they can never match) — keep them out of the band join, where
     # a NULL signature would band to the "" bucket and fan out
     cat_sigs = catalog.filter(F.col("signature").isNotNull())
     ob = _band_buckets(cat_sigs, bands, rows)
-    nb = new_buckets if new_buckets is not None else _band_buckets(
-        new_sigs, bands, rows
-    )
+    nb = _band_buckets(new_sigs, bands, rows)
     if max_bucket_docs is not None:
         ok = (
             ob.select("band", "bucket")
@@ -249,24 +246,12 @@ def minhash_component_catalog(
     from textalyzer_spark.operators.graph import connected_components
 
     # ONE kernel pass + ONE materialization feeds the stored
-    # signatures (computed in-kernel), the band cut and the
-    # exact-verified pair chain (round 8: previously the affine-min
-    # aggregation ran as its own shuffle — twice, before the sigs=
-    # pass-through — on top of the shingle pass)
-    raw = _distinct_shingles(
-        df, k, id_col, text_col, with_base_hash=True,
-        sig_params=(num_hashes, seed),
-    ).localCheckpoint()
-    sh = raw.filter(F.col("shingle").isNotNull()).select(
-        "doc_id", "shingle", "x"
-    )
-    sigs = raw.filter(F.col("shingle").isNull()).select(
-        "doc_id", "signature"
-    )
+    # signatures, the band cut and the exact-verified pair chain
+    built = shingle_signatures(df, k, num_hashes, seed, id_col, text_col)
     pairs = minhash_lsh_pairs(
         df, k=k, num_hashes=num_hashes, bands=bands, threshold=threshold,
         seed=seed, max_bucket_docs=max_bucket_docs,
-        id_col=id_col, text_col=text_col, shingles=sh, sigs=sigs,
+        id_col=id_col, text_col=text_col, shingle_sigs=built,
     )
     docs = df.select(F.col(id_col).alias("doc_id")).distinct()
     labels = connected_components(
@@ -275,7 +260,7 @@ def minhash_component_catalog(
         ),
         docs,
     )
-    return labels.join(sigs, "doc_id", "left").select(
+    return labels.join(built.signatures, "doc_id", "left").select(
         "doc_id", "signature", "component"
     )
 
@@ -325,32 +310,17 @@ def incremental_near_dup_components(
     ).select(F.col("doc_id").alias("src"), F.col("component").alias("dst"))
     # ONE kernel pass + ONE materialization over the new batch feeds
     # the intra-batch pair chain, the cross band join and the cross
-    # estimator's signature attach: signatures are computed in-kernel
-    # (round 8 — previously a separate affine-min aggregation shuffle,
-    # run twice before the sigs= pass-through), and the shared band
-    # cut derives from the checkpoint as a cheap narrow explode per
-    # consumer
-    raw_new = _distinct_shingles(
-        new_df, k, id_col, text_col, with_base_hash=True,
-        sig_params=(num_hashes, seed),
-    ).localCheckpoint()
-    sh_new = raw_new.filter(F.col("shingle").isNotNull()).select(
-        "doc_id", "shingle", "x"
-    )
-    new_sigs = raw_new.filter(F.col("shingle").isNull()).select(
-        "doc_id", "signature"
-    )
-    new_buckets = _band_buckets(new_sigs, bands, num_hashes // bands)
+    # estimator's signature attach; each band cut derives from the
+    # checkpoint as a cheap narrow explode per consumer
+    built = shingle_signatures(new_df, k, num_hashes, seed, id_col, text_col)
     intra = minhash_lsh_pairs(
         new_df, k=k, num_hashes=num_hashes, bands=bands,
         threshold=threshold, seed=seed, max_bucket_docs=max_bucket_docs,
-        id_col=id_col, text_col=text_col, shingles=sh_new,
-        buckets=new_buckets,
+        id_col=id_col, text_col=text_col, shingle_sigs=built,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     cross = _cross_pairs_from_sigs(
-        new_sigs, catalog.select("doc_id", "signature"),
+        built.signatures, catalog.select("doc_id", "signature"),
         num_hashes, bands, threshold, max_bucket_docs,
-        new_buckets=new_buckets,
     ).select(F.col("doc_old").alias("src"), F.col("doc_new").alias("dst"))
     docs = (
         catalog.select("doc_id")

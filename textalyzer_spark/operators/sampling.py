@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from textalyzer_spark.operators.dedup import _md5_le8_col
+from textalyzer_spark.functions.hashing import md5_le8_col
 
 _TWO64 = float(1 << 64)
 
@@ -36,7 +36,7 @@ def sample_u(id_col: Column | str, salt: str = "") -> Column:
     ``salt || doc_id`` divided by 2^64 (double; bit-identical in the
     DuckDB twin)."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    h = _md5_le8_col(F.concat(F.lit(salt), c.cast("string")))
+    h = md5_le8_col(F.concat(F.lit(salt), c.cast("string")))
     return (h.cast("double") / F.lit(_TWO64)).alias("u")
 
 
@@ -300,7 +300,7 @@ def weighted_sample(
             )
         ),
     ).otherwise(w)
-    h = _md5_le8_col(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    h = md5_le8_col(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     u = (h + F.lit(1)).cast("double") / F.lit(_TWO64)
     lnv = _ln_udf()
     scored = df.select(

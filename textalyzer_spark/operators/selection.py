@@ -71,19 +71,19 @@ def _doc_bucket_counts(
     are globally distinct by construction and the per-occurrence
     feature explode + md5-hex-conv chain + (doc, bucket) hash-agg
     shuffle all disappear (round 8 — the shingle-kernel discipline).
-    Feature hashing replays md5-LE8 in Python
-    (``int.from_bytes(md5(f)[:8], 'little') % n_buckets``, the exact
-    value the JVM ``_md5_le8_col`` + pmod chain produces) and
+    Feature hashing is Python ``md5_le8(f) % n_buckets``
+    (functions/hashing.py — the exact value the JVM ``md5_le8_col``
+    + pmod chain produces) and
     tokenization is Python ``re`` over the pinned
     ``alphabet.WS_SPLIT`` — the identities already pinned for
     :func:`dsir_score_stateless`. Row-set identical to
     ``_doc_features`` → hash → groupBy(doc_id, bucket)."""
-    import hashlib
     import re
     from collections import Counter
     from collections.abc import Iterator
 
     from textalyzer_spark.functions.alphabet import WS_SPLIT
+    from textalyzer_spark.functions.hashing import md5_le8
 
     ws_re = re.compile(WS_SPLIT)
 
@@ -100,14 +100,7 @@ def _doc_bucket_counts(
                     toks[i] + " " + toks[i + 1]
                     for i in range(len(toks) - 1)
                 ]
-                c = Counter(
-                    int.from_bytes(
-                        hashlib.md5(f.encode("utf-8")).digest()[:8],
-                        "little",
-                    )
-                    % n_buckets
-                    for f in feats
-                )
+                c = Counter(md5_le8(f) % n_buckets for f in feats)
                 # NULL target flags stay NULL (the JVM bool_or / where
                 # semantics): pandas renders them as None/NaN
                 tg = (
@@ -282,17 +275,17 @@ def dsir_score_stateless(
     """The streaming-compatible DSIR scorer: identical output schema
     to :func:`dsir_weights` but as a pure per-row projection — no
     explode, no aggregation — so it runs append-mode on an unbounded
-    stream. Feature hashing replays md5-LE8 in Python
-    (``int.from_bytes(md5(f)[:8], 'little') % n_buckets`` — the same
-    value the JVM ``_md5_le8_col`` + pmod chain produces);
+    stream. Feature hashing is Python ``md5_le8(f) % n_buckets``
+    (functions/hashing.py — the same value the JVM ``md5_le8_col`` +
+    pmod chain produces);
     tokenization is Python ``re`` over the pinned
     ``alphabet.WS_SPLIT``. Bit-identical to the batch scorer on the
     training corpus (pinned by tests); unseen buckets score
     ``lam_unseen_micro``."""
-    import hashlib
     import re
 
     from textalyzer_spark.functions.alphabet import WS_SPLIT
+    from textalyzer_spark.functions.hashing import md5_le8
 
     bc = df.sparkSession.sparkContext.broadcast(
         (dict(lam_map), int(lam_unseen_micro), int(n_buckets))
@@ -310,9 +303,7 @@ def dsir_score_stateless(
             ]
             w = 0
             for f in feats:
-                b = int.from_bytes(
-                    hashlib.md5(f.encode("utf-8")).digest()[:8], "little"
-                ) % nb
+                b = md5_le8(f) % nb
                 w += lam.get(b, unseen)
             ns.append(len(feats))
             ws.append(w)

@@ -4,25 +4,16 @@
 token n-grams per BASELINE.json north_star "n-gram shingling with
 rolling-hash duplicate detection").
 
-All JVM-side: the shingle expansion is a higher-order-function
-``transform`` over the token array (no Python, no window shuffle —
-shingling is per-document so it rides the scan partitioning; the only
-shuffle is the final groupBy on the shingle key).
+The shingle expansion runs in Arrow-batched kernels (no window
+shuffle — shingling is per-document so it rides the scan
+partitioning; the only shuffle is the final groupBy on the shingle
+key).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from textalyzer_spark.functions.tokenize import tokens_col
-
-
-def shingles_from_tokens(tokens: Column, k: int) -> Column:
-    """array<string>: all k-grams (space-joined) of the token array."""
-    n = F.size(tokens)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(0)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tokens, i, k)))
 
 
 def doc_shingles(

@@ -374,8 +374,7 @@ def embedding_near_dup_pairs_lsh(
         # ALREADY MATERIALIZED ``_hyperplane_buckets`` table of the
         # same (vectors, dim, n_bits, n_tables, seed) — the
         # component-maintenance path shares ONE python hyperplane
-        # pass between this intra join and its cross join (round 8,
-        # the minhash buckets= discipline)
+        # pass between this intra join and its cross join (round 8)
         vs = buckets
     else:
         vs = _hyperplane_buckets(

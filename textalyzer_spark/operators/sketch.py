@@ -52,7 +52,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from textalyzer_spark.operators.dedup import _md5_le8_col
+from textalyzer_spark.functions.hashing import md5_le8_hex_col
 
 #: default precision: m = 4096 registers, standard error 1.04/sqrt(m)
 #: ~= 1.6%. ``p`` must be a multiple of 4 (registers are carved from
@@ -80,10 +80,8 @@ def _split_hash(value: Column, p: int, salt: str) -> tuple[Column, Column]:
     arithmetic. ``w < 2^52`` for p=12, so it is a plain bigint."""
     if p % 4 != 0 or not 4 <= p <= 16:
         raise ValueError("p must be a multiple of 4 in [4, 16]")
-    h = F.md5(F.concat(F.lit(salt), value))
-    # first 8 digest bytes, byte-reversed == md5_number_upper
-    # (dedup._md5_le8_col) — here split into high/low hex spans
-    le = F.concat(*[F.substring(h, i, 2) for i in (15, 13, 11, 9, 7, 5, 3, 1)])
+    # md5-LE8 as hex, split into high/low hex spans
+    le = md5_le8_hex_col(F.concat(F.lit(salt), value))
     lo_nibbles = p // 4
     w = F.conv(F.substring(le, 1, 16 - lo_nibbles), 16, 10).cast("bigint")
     bucket = F.conv(F.substring(le, 17 - lo_nibbles, lo_nibbles), 16, 10).cast(

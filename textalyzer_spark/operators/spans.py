@@ -52,9 +52,8 @@ def process_spans(nested: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
     whitespace boundaries (corpus.py), so tokenizing the concatenated
     text spans equals tokenizing per-span.
 
-    :func:`process_spans_exploded` is the explode→reassemble variant
-    (one shuffle) used by tests to prove order preservation when a
-    pipeline does have to shuffle spans.
+    :func:`process_spans_arrow` is the mapInArrow production twin
+    (same output schema and values).
     """
     text_concat = F.array_join(
         F.transform(
@@ -91,20 +90,21 @@ def process_spans(nested: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
     )
 
 
-def process_spans_fused(nested: DataFrame) -> DataFrame:
-    """Single-pass mapInPandas variant of :func:`process_spans` (same
-    output schema and values).
+def process_spans_arrow(nested: DataFrame) -> DataFrame:
+    """mapInArrow variant of :func:`process_spans` (same output
+    schema and values), fusing tokenize + syllables + passthrough into
+    ONE python pass per Arrow batch.
 
-    Why it exists: the pandas-UDF variant routes every row through
-    ArrowEvalPython, which queues the ORIGINAL row (the heavy spans
-    array) in a HybridRowQueue while the python result is awaited —
-    measured as a hard ~12 s floor on 2M docs that does not improve
-    with cores. Fusing tokenize+syllables+passthrough into ONE
-    mapInPandas stage streams each Arrow batch through python exactly
-    once, no JVM-side row queue, and python does the cheap metric
-    arithmetic it already has in hand.
+    The pandas-UDF variant routes every row through ArrowEvalPython,
+    which queues the ORIGINAL row (the heavy spans array) in a
+    HybridRowQueue while the python result is awaited; a mapInPandas
+    variant pays python dict materialization of every span struct in
+    both directions. Here the spans column stays a pyarrow ListArray
+    end to end (zero-copy passthrough) and python touches only the
+    flat kind/text child arrays — the fastest python-tokenizer
+    variant and the production default.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     from textalyzer_spark.functions.syllables import count_syllables
     from textalyzer_spark.functions.tokenize import tokenize_text
@@ -112,53 +112,6 @@ def process_spans_fused(nested: DataFrame) -> DataFrame:
     # id type follows the input (string fixtures AND bigint ids, e.g.
     # the html_to_spans corpus) — a hardcoded string schema makes the
     # JVM read an int64 arrow vector as UTF8 and fail
-    id_type = dict(nested.dtypes).get("doc_id", "string")
-    schema = (
-        f"doc_id {id_type}, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>, n_text_spans bigint, "
-        "n_media_spans bigint, n_tokens bigint, n_syllables bigint"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            n_text, n_media, n_tok, n_syl = [], [], [], []
-            for spans in pdf["spans"]:
-                texts = [s["text"] for s in spans if s["kind"] == "text"]
-                n_text.append(len(texts))
-                n_media.append(sum(1 for s in spans if s["kind"] == "media"))
-                toks = tokenize_text("".join(texts))
-                n_tok.append(len(toks))
-                n_syl.append(sum(count_syllables(t) for t in toks))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "spans": pdf["spans"],
-                    "n_text_spans": n_text,
-                    "n_media_spans": n_media,
-                    "n_tokens": n_tok,
-                    "n_syllables": n_syl,
-                }
-            )
-
-    return nested.mapInPandas(run, schema)
-
-
-def process_spans_arrow(nested: DataFrame) -> DataFrame:
-    """mapInArrow variant of :func:`process_spans_fused` (same output
-    schema and values).
-
-    The fused pandas variant still pays python dict materialization of
-    every span struct in both directions; here the spans column stays
-    a pyarrow ListArray end to end (zero-copy passthrough) and python
-    touches only the flat kind/text child arrays. This is the fastest
-    python-tokenizer variant and the production default candidate.
-    """
-    import pyarrow as pa
-
-    from textalyzer_spark.functions.syllables import count_syllables
-    from textalyzer_spark.functions.tokenize import tokenize_text
-
-    # id type follows the input (see process_spans_fused note)
     id_type = dict(nested.dtypes).get("doc_id", "string")
     schema_str = (
         f"doc_id {id_type}, spans array<struct<kind:string,text:string,"
@@ -208,61 +161,6 @@ def process_spans_arrow(nested: DataFrame) -> DataFrame:
     return nested.mapInArrow(run, schema_str)
 
 
-def process_spans_exploded(nested: DataFrame) -> DataFrame:
-    """Explode → process → reassemble variant of :func:`process_spans`
-    (same output schema); exists to prove (kind, text, media_ref,
-    order) survival across a real shuffle."""
-    spans = explode_spans(nested)
-    toks = F.when(F.col("kind") == "text", tokens_udf(F.col("text"))).otherwise(
-        F.array().cast("array<string>")
-    )
-    enriched = spans.withColumn("tokens", toks).withColumn(
-        "span_syllables",
-        F.aggregate(
-            F.transform("tokens", syllables_col), F.lit(0), lambda acc, x: acc + x
-        ),
-    )
-    reassembled = (
-        enriched.groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct("pos", "kind", "text", "media_ref", "offset")
-                    )
-                ),
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-            F.sum(F.when(F.col("kind") == "text", 1).otherwise(0)).alias(
-                "n_text_spans"
-            ),
-            F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).alias(
-                "n_media_spans"
-            ),
-            F.sum(F.size("tokens")).alias("n_tokens"),
-            F.sum("span_syllables").alias("n_syllables"),
-        )
-    )
-    # a doc whose spans array is empty emits no exploded rows and
-    # would silently vanish in the groupBy — left-join the result
-    # back onto the input doc_ids and fill zero metrics, matching
-    # process_spans/process_spans_fused exactly
-    span_type = nested.schema["spans"].dataType.simpleString()
-    return nested.select("doc_id").join(reassembled, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("spans", F.array().cast(span_type)).alias("spans"),
-        *[
-            F.coalesce(c, F.lit(0).cast("bigint")).alias(c)
-            for c in ("n_text_spans", "n_media_spans", "n_tokens", "n_syllables")
-        ],
-    )
-
-
 def span_word_frequency(nested: DataFrame) -> DataFrame:
     """Corpus word-frequency over text spans only — must equal the
     flat-table histogram when the nested table was synthesized from it
@@ -274,22 +172,3 @@ def span_word_frequency(nested: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("count"))
         .orderBy(F.desc("count"), F.asc("word"))
     )
-
-
-def span_readability(nested: DataFrame) -> DataFrame:
-    """Per-document readability computed over concatenated text spans
-    (sentence boundaries must see the full document text, so this
-    reassembles text before scoring)."""
-    from textalyzer_spark.operators.readability import readability
-
-    flat = nested.select(
-        "doc_id",
-        F.array_join(
-            F.transform(
-                F.filter("spans", lambda s: s["kind"] == "text"),
-                lambda s: s["text"],
-            ),
-            "",
-        ).alias("text"),
-    )
-    return readability(flat)

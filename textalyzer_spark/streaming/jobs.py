@@ -55,18 +55,6 @@ def streaming_pii_stats(spark: SparkSession, input_dir: str) -> DataFrame:
     return pii_stats(_stream(spark, input_dir))
 
 
-def streaming_hash_sample(
-    spark: SparkSession, input_dir: str, rate: float, salt: str = ""
-) -> DataFrame:
-    """Deterministic hash sampling of a stream: the keep decision is
-    a pure function of (salt, doc_id), so the streaming run keeps
-    EXACTLY the rows the batch run over the same files keeps —
-    stateless scan filter, append mode."""
-    from textalyzer_spark.operators.sampling import hash_sample
-
-    return hash_sample(_stream(spark, input_dir), rate, salt=salt)
-
-
 def streaming_stratified_sample(
     spark: SparkSession,
     input_dir: str,
@@ -262,9 +250,12 @@ def streaming_near_dup(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from textalyzer_spark.operators.dedup import minhash_signatures
+    from textalyzer_spark.operators.dedup import (
+        _rows_per_band,
+        minhash_signatures,
+    )
 
-    rows = num_hashes // bands
+    rows = _rows_per_band(num_hashes, bands)
     docs = _stream(spark, input_dir)
     sigs = minhash_signatures(docs, k=k, num_hashes=num_hashes)
     buckets = sigs.select(
