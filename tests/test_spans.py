@@ -4,11 +4,25 @@ order), media spans untouched (FIXTURES.md §1.1)."""
 
 from __future__ import annotations
 
+import random
+from contextlib import contextmanager
+
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
-from textalyzer_spark.corpus import build_spans, nested_from_flat, nested_from_texts
+from textalyzer_spark.corpus import (
+    NESTED_SCHEMA,
+    build_spans,
+    nested_from_flat,
+    nested_from_texts,
+)
+from textalyzer_spark.functions.syllables import count_syllables
+from textalyzer_spark.functions.tokenize import tokenize_text
 from textalyzer_spark.operators.frequency import word_frequency
 from textalyzer_spark.operators.spans import (
+    _SLICE_ROWS,
+    _span_metrics,
     process_spans,
     process_spans_arrow,
     span_word_frequency,
@@ -116,3 +130,149 @@ def test_media_spans_untouched_under_repartition(spark):
     }
     assert media_in == media_out
     assert len(media_in) > 0  # corpus actually contains media spans
+
+
+METRICS = ["n_text_spans", "n_media_spans", "n_tokens", "n_syllables"]
+
+
+def _metrics(df):
+    return {r["doc_id"]: tuple(r[c] for c in METRICS) for r in df.collect()}
+
+
+def _python_metrics(spans):
+    """METRICS of one doc in plain Python, as process_spans defines them."""
+    if spans is None:
+        return (None, None, 0, 0)
+    text = [s for s in spans if s and s["kind"] == "text"]
+    toks = tokenize_text("".join(s["text"] or "" for s in text))
+    n_media = sum(1 for s in spans if s and s["kind"] == "media")
+    return (len(text), n_media, len(toks), sum(map(count_syllables, toks)))
+
+
+def _span(i, kind, text=None):
+    ref = None if kind == "text" else f"media://{i}"
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": i}
+
+
+def _spans(*parts):
+    """A str part is a text span, None a media span."""
+    return [
+        _span(i, "media") if p is None else _span(i, "text", p)
+        for i, p in enumerate(parts)
+    ]
+
+
+def test_arrow_kernel_matches_twin_on_hostile_spans(spark):
+    rows = [
+        # a text span with NULL text joins as "" in both variants
+        ("null_text", [_span(0, "text", "Hello"), _span(1, "text")]),
+        # only kind == "media" counts as media
+        ("other_kinds", [_span(0, "image"), _span(1, None)]),
+        ("null_spans", None),
+    ]
+    nested = spark.createDataFrame(rows, NESTED_SCHEMA)
+    want = {
+        "null_text": (2, 0, 1, 2),
+        "other_kinds": (0, 0, 0, 0),
+        "null_spans": (None, None, 0, 0),
+    }
+    assert _metrics(process_spans(nested)) == want
+    assert _metrics(process_spans_arrow(nested)) == want
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="session")
+def mixed_corpus(spark):
+    """One partition of ASCII and non-ASCII docs, more rows than one
+    kernel slice, with the hostile docs on both sides of the first
+    slice seam; plus the per-doc metrics summed in plain Python."""
+    special = [
+        ("caps", _spans("HELLO World, it's 42 o'clock!! ", "Don't-stop x2y.")),
+        ("split", _spans("a won", None, "derful DAY")),
+        # empty rows between two letters: the row boundary still splits
+        ("no_spans", []),
+        ("empty_text", _spans("")),
+        (
+            "long",
+            _spans(" ".join(f"Word{i % 7} it's, STRING" for i in range(1500))),
+        ),
+        ("split_utf8", _spans("na", None, "ïve café")),
+        ("whitespace", _spans("  \t\n ", None, " ")),
+        ("greek", _spans("ΟΔΥΣΣΕΥΣ ", "σοφός")),
+    ]
+    rng = random.Random(7)
+    vocab = ["the", "Quick", "brown", "fox's", "jumps", "over", "lazy", "dog."]
+    filler = [
+        (
+            f"f{i}",
+            build_spans(
+                f"f{i}",
+                " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 12)))
+                + (" Ζεύς" if i % 50 == 0 else ""),
+            ),
+        )
+        for i in range(_SLICE_ROWS + 40)
+    ]
+    rows = special + filler[: _SLICE_ROWS - 4] + special + filler[_SLICE_ROWS - 4 :]
+    rows = [(f"{k}_{i}", v) for i, (k, v) in enumerate(rows)]
+    want = {doc_id: _python_metrics(spans) for doc_id, spans in rows}
+    return spark.createDataFrame(rows, NESTED_SCHEMA).coalesce(1), want
+
+
+def test_columnar_and_fallback_rows_agree_with_twin(spark, mixed_corpus):
+    nested, want = mixed_corpus
+    assert _metrics(process_spans(nested)) == want
+    # 7-row batches mix ASCII and fallback rows in every batch; the
+    # default batch puts all rows in one, across a slice seam
+    for batch_rows in (7, 8192):
+        with _arrow_batch_rows(spark, batch_rows):
+            assert _metrics(process_spans_arrow(nested)) == want, batch_rows
+
+
+def test_span_kernel_matches_python_on_random_slices():
+    """The kernel body alone (no Spark) on random slices of random
+    hostile rows: NULL spans, NULL spans inside, other kinds, NULL
+    text, empty rows between letters, words split across spans."""
+    parts = ["Hello", "wor", "ld", "Σίσυφος", "it's", "3abc", " ", "", "naïve", "le"]
+    kinds = ["text", "text", "text", "media", "image", None]
+    s = pa.string()
+    span_type = pa.list_(
+        pa.struct([("kind", s), ("text", s), ("media_ref", s), ("offset", pa.int32())])
+    )
+    for seed in range(20):
+        rng = random.Random(seed)
+        rows = []
+        for _ in range(rng.randint(1, 300)):
+            if rng.random() < 0.05:
+                rows.append(None)
+                continue
+            spans = []
+            for i in range(rng.randint(0, 5)):
+                kind = rng.choice(kinds)
+                text = None
+                if kind == "text" and rng.random() > 0.1:
+                    text = "".join(
+                        rng.choice(parts) + rng.choice(["", " ", "."])
+                        for _ in range(rng.randint(0, 4))
+                    )
+                spans.append(
+                    None
+                    if rng.random() < 0.05
+                    else {"kind": kind, "text": text, "media_ref": None, "offset": i}
+                )
+            rows.append(spans)
+        arr = pa.array(rows, span_type)
+        lo = rng.randrange(len(rows))
+        hi = rng.randint(lo, len(rows))
+        got = list(zip(*(a.to_pylist() for a in _span_metrics(arr.slice(lo, hi - lo)))))
+        assert got == [_python_metrics(r) for r in rows[lo:hi]], seed

@@ -17,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Callable, Collection
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from textalyzer_spark.functions.hashing import md5_le8
@@ -336,27 +336,32 @@ def _rows_per_band(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def _band_buckets(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
-    """``(doc_id, band, bucket)`` from a ``(doc_id, signature)`` table:
-    the signature cut into ``bands`` bands of ``rows`` values, each
-    band's values joined as a string bucket key (NOT re-hashed — see
-    the key-width note in :func:`minhash_lsh_pairs`). Shared by the
-    single-corpus LSH join and the incremental catalog join."""
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(F.col("signature"), bnd * rows + 1, rows),
-                        lambda x: x.cast("string"),
-                    ),
+def band_buckets_col(bands: int, rows: int) -> Column:
+    """``posexplode`` of the ``signature`` column into ``(band,
+    bucket)``: the signature cut into ``bands`` bands of ``rows``
+    values, each band's values joined as a string bucket key (NOT
+    re-hashed — see the key-width note in :func:`minhash_lsh_pairs`).
+    The one definition of the bucket key: the batch, incremental and
+    streaming LSH joins must cut identical buckets."""
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda bnd: F.concat_ws(
+                ",",
+                F.transform(
+                    F.slice(F.col("signature"), bnd * rows + 1, rows),
+                    lambda x: x.cast("string"),
                 ),
-            )
-        ).alias("band", "bucket"),
-    )
+            ),
+        )
+    ).alias("band", "bucket")
+
+
+def _band_buckets(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """``(doc_id, band, bucket)`` from a ``(doc_id, signature)`` table.
+    Shared by the single-corpus LSH join and the incremental catalog
+    join."""
+    return sigs.select("doc_id", band_buckets_col(bands, rows))
 
 
 def minhash_lsh_pairs(

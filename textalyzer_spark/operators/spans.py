@@ -90,24 +90,137 @@ def process_spans(nested: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
     )
 
 
-def process_spans_arrow(nested: DataFrame) -> DataFrame:
-    """mapInArrow variant of :func:`process_spans` (same output
-    schema and values), fusing tokenize + syllables + passthrough into
-    ONE python pass per Arrow batch.
+# Rows per slice of an Arrow batch in process_spans_arrow: the columnar
+# path holds several per-byte temporaries of the slice's joined text,
+# and whole 8,192-row batches raised the Python workers' peak RSS by
+# ~13% (perfbench extract, 4 cores) for no speed-up
+_SLICE_ROWS = 1024
 
-    The pandas-UDF variant routes every row through ArrowEvalPython,
-    which queues the ORIGINAL row (the heavy spans array) in a
-    HybridRowQueue while the python result is awaited; a mapInPandas
-    variant pays python dict materialization of every span struct in
-    both directions. Here the spans column stays a pyarrow ListArray
-    end to end (zero-copy passthrough) and python touches only the
-    flat kind/text child arrays — the fastest python-tokenizer
-    variant and the production default.
-    """
+
+def _utf8(strings):
+    """``(row offsets from 0, uint8 bytes)`` of a StringArray's buffers."""
+    import numpy as np
+
+    _, offs_buf, data_buf = strings.buffers()
+    offs = np.frombuffer(offs_buf, np.int32)[strings.offset : strings.offset + len(strings) + 1]
+    if offs[-1] == offs[0]:
+        return offs - offs[0], np.zeros(0, np.uint8)
+    return offs - offs[0], np.frombuffer(data_buf, np.uint8)[offs[0] : offs[-1]]
+
+
+def _ascii_token_metrics(row_at, buf):
+    """``(n_tokens, n_syllables)`` int64 arrays per row of ASCII text
+    (``row_at``: the rows' offsets into ``buf``, its UTF-8 bytes), from
+    array operations: a token is a maximal ``[A-Za-z]`` run inside one
+    row (tokenize_text's ASCII rule), lowered by ``| 0x20``;
+    :func:`count_syllables` runs once per distinct token."""
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from textalyzer_spark.functions.syllables import count_syllables
+
+    lower = buf | 0x20
+    alpha = np.zeros(len(buf) + 2, bool)
+    np.less(lower - ord("a"), 26, out=alpha[1:-1])  # uint8 wrap-around: [A-Za-z]
+    # letter runs start and end where alpha flips
+    flips = np.flatnonzero(alpha[1:] != alpha[:-1])
+    starts, ends = flips[0::2], flips[1::2]
+    # a run across a row boundary is two tokens (empty rows repeat a
+    # boundary)
+    cut = row_at[1:-1]
+    cut = np.unique(cut[alpha[cut] & alpha[cut + 1]])
+    if len(cut):
+        starts = np.insert(starts, np.searchsorted(starts, cut), cut)
+        ends = np.insert(ends, np.searchsorted(ends, cut), cut)
+    # the letters compacted are the tokens back to back
+    tok_at = np.zeros(len(starts) + 1, np.int32)
+    np.cumsum(ends - starts, out=tok_at[1:])
+    tokens = pa.StringArray.from_buffers(
+        len(starts), pa.py_buffer(tok_at), pa.py_buffer(lower.compress(alpha[1:-1]))
+    )
+    enc = pc.dictionary_encode(tokens)
+    syl_of = np.fromiter(
+        (count_syllables(w) for w in enc.dictionary.to_pylist()),
+        np.int64,
+        count=len(enc.dictionary),
+    )
+    syl_cum = np.zeros(len(starts) + 1, np.int64)
+    np.cumsum(syl_of[enc.indices.to_numpy()], out=syl_cum[1:])
+    row_tok = np.searchsorted(starts, row_at)
+    return np.diff(row_tok), np.diff(syl_cum[row_tok])
+
+
+def _span_metrics(spans):
+    """``(n_text_spans, n_media_spans, n_tokens, n_syllables)`` arrays
+    for one ListArray of span structs, with :func:`process_spans`'
+    values: kinds other than text/media count in neither span column,
+    a NULL ``spans`` row has NULL span counts and no tokens, and a NULL
+    text inside a text span joins as ``""``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from textalyzer_spark.functions.syllables import count_syllables
     from textalyzer_spark.functions.tokenize import tokenize_text
+
+    n = len(spans)
+    lengths = pc.list_value_length(spans).fill_null(0).to_numpy()
+    span_at = np.zeros(n + 1, np.int32)
+    np.cumsum(lengths, out=span_at[1:])
+    flat = pc.list_flatten(spans)
+    # flatten() merges a NULL span's validity into its fields
+    fields = flat.flatten()
+    kind, text = (fields[flat.type.get_field_index(f)] for f in ("kind", "text"))
+    is_text = pc.fill_null(pc.equal(kind, "text"), False)
+    is_media = pc.fill_null(pc.equal(kind, "media"), False)
+    null_spans = spans.is_null().to_numpy(zero_copy_only=False)
+    n_spans = []
+    for is_kind in (is_text, is_media):
+        cum = np.zeros(len(flat) + 1, np.int64)
+        np.cumsum(is_kind.to_numpy(zero_copy_only=False), out=cum[1:])
+        n_spans.append(pa.array(np.diff(cum[span_at]), pa.int64(), mask=null_spans))
+
+    text = pc.if_else(is_text, pc.fill_null(text, ""), "")
+    joined = pc.binary_join(pa.ListArray.from_arrays(pa.array(span_at), text), "")
+    row_at, buf = _utf8(joined)
+    other = np.zeros(0, np.int64)
+    if len(buf) and buf.max() >= 0x80:
+        # a non-ASCII row takes tokenize_text's Unicode-exact path on its
+        # own; the rest of the slice stays columnar
+        ascii_rows = pc.string_is_ascii(joined)
+        other = np.flatnonzero(~ascii_rows.to_numpy(zero_copy_only=False))
+        row_at, buf = _utf8(pc.if_else(ascii_rows, joined, ""))
+    n_tok, n_syl = _ascii_token_metrics(row_at, buf)
+    for i, t in zip(other, pc.take(joined, pa.array(other)).to_pylist()):
+        toks = tokenize_text(t)
+        n_tok[i] = len(toks)
+        n_syl[i] = sum(count_syllables(w) for w in toks)
+    return (*n_spans, pa.array(n_tok), pa.array(n_syl))
+
+
+def process_spans_arrow(nested: DataFrame) -> DataFrame:
+    """mapInArrow production twin of :func:`process_spans` (same output
+    schema and values): tokenize + syllables + span passthrough in ONE
+    python pass per Arrow batch, without a per-document Python loop.
+
+    The spans column stays a pyarrow ListArray end to end (zero-copy
+    passthrough): a pandas UDF would queue every ORIGINAL row (the heavy
+    spans array) in ArrowEvalPython's HybridRowQueue while the python
+    result is awaited, and mapInPandas would build a python dict per
+    span struct in both directions. Each batch is cut into zero-copy slices of
+    ``_SLICE_ROWS`` rows, which bound the kernel's per-byte temporaries.
+    Per slice, each document's text-kind children are joined with
+    ``binary_join`` (media and NULL text join as ``""``, so a word split
+    across two text spans counts once). Rows whose joined text is ASCII
+    are tokenized with numpy over the joined UTF-8 buffer, and
+    :func:`count_syllables` runs once per distinct token; per-document
+    totals are differences of cumulative sums. A non-ASCII row falls
+    back, alone, to :func:`tokenize_text`, whose ``jvm_lower`` casing is
+    Unicode-exact; one such row does not take its batch off the
+    columnar path.
+    """
+    import pyarrow as pa
 
     # id type follows the input (string fixtures AND bigint ids, e.g.
     # the html_to_spans corpus) — a hardcoded string schema makes the
@@ -121,33 +234,16 @@ def process_spans_arrow(nested: DataFrame) -> DataFrame:
 
     def run(batches):
         for b in batches:
-            spans = b.column(b.schema.get_field_index("spans"))
-            if isinstance(spans, pa.ChunkedArray):
-                spans = spans.combine_chunks()
-            flat = spans.flatten()
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            offsets = spans.offsets.to_pylist()
-            n_text, n_media, n_tok, n_syl = [], [], [], []
-            for i in range(len(offsets) - 1):
-                lo, hi = offsets[i], offsets[i + 1]
-                t_parts = [
-                    texts[j] for j in range(lo, hi) if kinds[j] == "text"
-                ]
-                n_text.append(len(t_parts))
-                n_media.append((hi - lo) - len(t_parts))
-                toks = tokenize_text("".join(t_parts))
-                n_tok.append(len(toks))
-                n_syl.append(sum(count_syllables(t) for t in toks))
+            parts = [
+                _span_metrics(b.slice(i, _SLICE_ROWS).column("spans"))
+                for i in range(0, b.num_rows, _SLICE_ROWS)
+            ]
+            metrics = [
+                pa.concat_arrays([p[k] for p in parts]) if parts else pa.array([], pa.int64())
+                for k in range(4)
+            ]
             yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(b.schema.get_field_index("doc_id")),
-                    spans,
-                    pa.array(n_text, pa.int64()),
-                    pa.array(n_media, pa.int64()),
-                    pa.array(n_tok, pa.int64()),
-                    pa.array(n_syl, pa.int64()),
-                ],
+                [b.column("doc_id"), b.column("spans"), *metrics],
                 names=[
                     "doc_id",
                     "spans",

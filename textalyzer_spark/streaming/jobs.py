@@ -252,28 +252,14 @@ def streaming_near_dup(
 
     from textalyzer_spark.operators.dedup import (
         _rows_per_band,
+        band_buckets_col,
         minhash_signatures,
     )
 
     rows = _rows_per_band(num_hashes, bands)
     docs = _stream(spark, input_dir)
     sigs = minhash_signatures(docs, k=k, num_hashes=num_hashes)
-    buckets = sigs.select(
-        "doc_id",
-        "signature",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(F.col("signature"), bnd * rows + 1, rows),
-                        lambda x: x.cast("string"),
-                    ),
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
+    buckets = sigs.select("doc_id", "signature", band_buckets_col(bands, rows))
 
     def proc(key, pdfs, state):
         # Vectorized per microbatch (round-2 nit: the old loop did a

@@ -36,7 +36,10 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from textalyzer_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8)
+    # one Spark core per host core (bench.py's SPARK_GRAFT_CPUS contract):
+    # more would oversubscribe the host the DuckDB side shares
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark("oracle-check", cores=cores, shuffle_partitions=cores)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
