@@ -648,8 +648,14 @@ def test_minhash_kernels_tolerate_all_short_doc_batches(spark):
     k-shingle must yield zero rows, not an Arrow conversion error:
     pandas' default float64 dtype for an empty column is not
     convertible to list<int64> (NumPyConverter) — hit by streaming
-    catalog maintenance on tiny micro-batches (round 8)."""
+    catalog maintenance on tiny micro-batches (round 8). The
+    per-document feature-count kernel's callers run on the same
+    batch: shingle counts are empty, tf-idf and DSIR still see the
+    one- and two-token docs."""
     import textalyzer_spark.operators.dedup as dd
+    from textalyzer_spark.operators.keywords import tfidf_topk_terms
+    from textalyzer_spark.operators.selection import dsir_weights
+    from textalyzer_spark.operators.shingles import token_shingle_duplicates
 
     docs = spark.createDataFrame(
         [(1, "a b"), (2, ""), (3, "x")], "doc_id bigint, text string"
@@ -659,19 +665,34 @@ def test_minhash_kernels_tolerate_all_short_doc_batches(spark):
     assert built.shingles.count() == 0
     assert built.signatures.count() == 0
     assert dd.minhash_lsh_pairs(docs, k=3, num_hashes=16, bands=4).count() == 0
+    assert token_shingle_duplicates(docs, k=3).count() == 0
+    assert {
+        (r["doc_id"], r["tok"], r["tf"])
+        for r in tfidf_topk_terms(docs, k=5).collect()
+    } == {(1, "a", 1), (1, "b", 1), (3, "x", 1)}
+    feats = {
+        r["doc_id"]: r["n_feats"]
+        for r in dsir_weights(docs, F.col("doc_id") == 1, n_buckets=16).collect()
+    }
+    assert feats == {1: 3, 2: 0, 3: 1}
 
 
 def test_doc_shingle_counts_matches_occurrence_groupby(spark):
     """token_shingle_duplicates' kernel pre-count (round 8): the
     per-(doc, shingle) occurrence rows must reproduce the definitional
-    doc_shingles -> groupBy(shingle) roll-up exactly — n_occurrences
-    as a SUM of per-doc counts, n_docs as a plain count of the
-    one-per-doc rows (replacing countDistinct)."""
+    per-occurrence shingles -> groupBy(shingle) roll-up exactly —
+    n_occurrences as a SUM of per-doc counts, n_docs as a plain count
+    of the one-per-doc rows (replacing countDistinct). The reference
+    shingles are built here in plain Python, with the k-gram join
+    written out."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
+    from textalyzer_spark.functions.tokenize import tokenize_text
     from textalyzer_spark.operators.shingles import (
-        _doc_shingle_counts,
-        doc_shingles,
+        doc_feature_counts,
+        token_kgrams,
         token_shingle_duplicates,
     )
 
@@ -686,23 +707,22 @@ def test_doc_shingle_counts_matches_occurrence_groupby(spark):
         (r["shingle"],): (r["n_occurrences"], r["n_docs"])
         for r in token_shingle_duplicates(df, k=3).collect()
     }
-    ref_rows = (
-        doc_shingles(df, 3)
-        .groupBy("shingle")
-        .agg(
-            F.count(F.lit(1)).alias("n_occurrences"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-        .filter(F.col("n_docs") > 1)
-        .collect()
-    )
-    ref = {(r["shingle"],): (r["n_occurrences"], r["n_docs"]) for r in ref_rows}
+    # one (doc_id, shingle) per occurrence, then the roll-up
+    occurrences = [
+        (doc_id, " ".join(toks[i : i + 3]))
+        for doc_id, text in rows
+        for toks in [tokenize_text(text)]
+        for i in range(len(toks) - 2)
+    ]
+    n_occ = Counter(sh for _, sh in occurrences)
+    n_docs = Counter(sh for _, sh in set(occurrences))
+    ref = {(sh,): (n_occ[sh], n_docs[sh]) for sh in n_occ if n_docs[sh] > 1}
     assert got == ref and len(got) > 0
     # the kernel emits ONE row per (doc, shingle): "a b c" appears in
     # docs 1, 2, 4 -> exactly 3 rows for it
     assert (
-        _doc_shingle_counts(df, 3, "doc_id", "text")
-        .filter(F.col("shingle") == "a b c")
+        doc_feature_counts(df, token_kgrams(3))
+        .filter(F.col("feature") == "a b c")
         .count()
         == 3
     )

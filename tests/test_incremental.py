@@ -133,6 +133,8 @@ def test_contamination_stats_planted(spark):
             (1, "once the quick brown fox jumps over everything"),
             (2, "completely clean text with many distinct tokens here"),
             (3, "tiny doc"),
+            # one benchmark 5-gram twice: counted per occurrence
+            (4, "the quick brown fox jumps and the quick brown fox jumps"),
         ],
         "doc_id bigint, text string",
     )
@@ -150,6 +152,10 @@ def test_contamination_stats_planted(spark):
     assert out[2]["contamination_frac"] == 0.0
     assert out[3]["n_kgrams"] == 0
     assert out[3]["contamination_frac"] is None
+    # 11 tokens -> 7 5-grams; 'the quick brown fox jumps' at 0 and 6
+    assert out[4]["n_kgrams"] == 7
+    assert out[4]["n_contaminated"] == 2
+    assert out[4]["contamination_frac"] == 2 / 7
 
 
 def test_incremental_simhash_two_batches(spark):
@@ -227,6 +233,8 @@ def test_contamination_by_benchmark_attribution(spark):
             (1, "once the quick brown fox jumps over everything"),
             (2, "they pack my box with five dozen liquor jugs daily"),
             (3, "wholly clean text with no benchmark overlap at all"),
+            # one bench-100 5-gram twice: counted per occurrence
+            (4, "the quick brown fox jumps and the quick brown fox jumps"),
         ],
         "doc_id bigint, text string",
     )
@@ -235,8 +243,9 @@ def test_contamination_by_benchmark_attribution(spark):
         for r in contamination_by_benchmark(train, bench, k=5).collect()
     }
     # doc 1 shares 2 of its 5-gram occurrences with bench 100 only;
-    # doc 2 shares 4 with bench 200 only; doc 3 appears nowhere
-    assert out == {(1, 100): 2, (2, 200): 4}
+    # doc 2 shares 4 with bench 200 only; doc 3 appears nowhere; doc 4
+    # repeats one bench-100 5-gram
+    assert out == {(1, 100): 2, (2, 200): 4, (4, 100): 2}
 
 
 def test_incremental_simhash_component_maintenance(spark):

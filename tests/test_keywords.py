@@ -85,14 +85,12 @@ def test_pmi_empty_and_single_token_corpus(spark):
 
 def test_doc_term_counts_matches_explode_groupby(spark):
     """tfidf's kernel tf table (round 8) must be row-identical to the
-    definitional explode(_ws_tokens) -> groupBy(doc_id, tok).count()
+    definitional explode(ws_tokens_col) -> groupBy(doc_id, tok).count()
     shape it replaced (WS_SPLIT parity incl. an NBSP-bearing token)."""
     from pyspark.sql import functions as F
 
-    from textalyzer_spark.operators.keywords import (
-        _doc_term_counts,
-        _ws_tokens,
-    )
+    from textalyzer_spark.functions.tokenize import ws_tokens, ws_tokens_col
+    from textalyzer_spark.operators.shingles import doc_feature_counts
 
     rows = [
         (1, "alpha beta alpha  beta\talpha"),
@@ -102,12 +100,12 @@ def test_doc_term_counts_matches_explode_groupby(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = {
-        (r["doc_id"], r["tok"]): r["tf"]
-        for r in _doc_term_counts(df, "doc_id", "text").collect()
+        (r["doc_id"], r["feature"]): r["n"]
+        for r in doc_feature_counts(df, ws_tokens).collect()
     }
     ref_rows = (
         df.select(
-            "doc_id", F.explode(_ws_tokens("text")).alias("tok")
+            "doc_id", F.explode(ws_tokens_col("text")).alias("tok")
         )
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("long").alias("tf"))

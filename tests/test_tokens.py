@@ -131,3 +131,37 @@ def test_kgram_batch_kernel_large_k():
             ref = rolling_kgram_hashes(t, k)
             got = [] if arr is None else [int(x) for x in arr]
             assert got == ref, (k, len(t))
+
+
+def test_token_rules_defined_only_in_tokenize_module():
+    """The whitespace-token rule, its JVM twin and the token k-gram
+    join are defined once, in functions/tokenize.py (``ws_tokens``,
+    ``ws_tokens_col``, ``kgrams``). A re-inlined copy anywhere else in
+    the engine is a second definition that can drift from the
+    oracles' rule. Static scan; no Spark session.
+
+    bpe's ``F.explode(F.split(F.lower(...), WS_SPLIT))`` word histogram
+    lowercases and explodes before a row filter — a different rule —
+    and does not match."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "textalyzer_spark"
+    allowed = {"functions/tokenize.py", "functions/alphabet.py", "oracles.py"}
+    rules = [
+        re.compile(r"re\.compile\(\s*WS_SPLIT\s*\)"),
+        # F.filter(F.split(<arg with one nesting level>, WS_SPLIT ...
+        re.compile(r"F\.filter\(\s*F\.split\((?:[^()]|\([^()]*\))*,\s*WS_SPLIT"),
+        re.compile(r'" "\.join\(\s*toks\['),
+    ]
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in allowed:
+            continue
+        src = path.read_text(encoding="utf-8")
+        for rule in rules:
+            for m in rule.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                hits.append(f"{rel}:{line}: {m.group(0)}")
+    assert not hits, "inlined token rule:\n" + "\n".join(hits)

@@ -17,6 +17,13 @@ Two implementations:
   split-then-lowercase order exactly; the parity-safe path mandated by
   BASELINE.json input_hint for the span pipeline. No per-row Python:
   the regex runs via pandas vectorized .str ops per Arrow batch.
+
+The other token rules live here too, each defined once:
+
+* ``ws_tokens`` / ``ws_tokens_col`` — the whitespace-token rule
+  (non-empty pieces of a split on ``alphabet.WS_SPLIT``), in Python
+  and as its JVM twin;
+* ``kgrams`` — the space-joined token k-gram (shingle) string.
 """
 
 from __future__ import annotations
@@ -29,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from textalyzer_spark.functions.alphabet import py_alpha_regex
+from textalyzer_spark.functions.alphabet import WS_SPLIT, py_alpha_regex
 
 # The JVM's own IsAlphabetic table as a Python class (generated,
 # tools/gen_unicode_tables.py) — so this path splits EXACTLY like
@@ -46,6 +53,8 @@ _ALPHA_RUN = py_alpha_regex()
 # class costs ~3x per char — str.isascii() is a cheap C check, and
 # real corpora are overwhelmingly ASCII rows
 _ASCII_RUN = re.compile(r"[A-Za-z]+")
+
+_WS_RE = re.compile(WS_SPLIT)
 
 
 def tokenize_text(text: str) -> list[str]:
@@ -72,6 +81,29 @@ def tokens_col(text: Column | str) -> Column:
     toks = F.split(c, r"[^\p{IsAlphabetic}]+")
     toks = F.filter(toks, lambda t: t != F.lit(""))
     return F.transform(toks, F.lower)
+
+
+def ws_tokens(text: str | None) -> list[str]:
+    """Whitespace tokens: the non-empty pieces of ``text`` split on the
+    pinned cross-engine class ``alphabet.WS_SPLIT`` (never ``\\s`` —
+    Java, Python and RE2 disagree on it). Python twin of
+    :func:`ws_tokens_col`; NULL text has no tokens."""
+    return [w for w in _WS_RE.split(text or "") if w != ""]
+
+
+def ws_tokens_col(text: Column | str) -> Column:
+    """JVM twin of :func:`ws_tokens`: ``array<string>`` of the non-empty
+    ``alphabet.WS_SPLIT`` pieces."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.filter(F.split(c, WS_SPLIT), lambda t: t != "")
+
+
+def kgrams(toks: list[str], k: int) -> list[str]:
+    """Every token ``k``-gram of ``toks`` in order, one per occurrence,
+    each joined with a single space (the shingle string the oracles
+    rebuild as ``w || ' ' || lead(w, 1) ...``). Empty when
+    ``len(toks) < k``."""
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
 
 def tokenize_pandas(s: pd.Series) -> pd.Series:

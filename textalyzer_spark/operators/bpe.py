@@ -53,6 +53,8 @@ def _word_histogram(
     class is the pinned cross-engine ``alphabet.WS_SPLIT`` — the SAME
     class the counting pass and the oracle use (Java/Python/RE2 ``\\s``
     all disagree on \\x0B and NBSP; ADVICE r5)."""
+    # lower, split, explode, THEN drop empties: a flat row filter stays
+    # in whole-stage codegen, unlike ws_tokens_col's array filter lambda
     words = (
         df.select(
             F.explode(F.split(F.lower(F.col(text_col)), WS_SPLIT)).alias("w")
@@ -185,14 +187,13 @@ def bpe_token_counts(
     under a frozen learned merge table. Arrow-batched; the segmented
     length of each distinct word is cached per worker, so the apply
     cost amortizes to a dict lookup on natural-language corpora."""
-    import re
     from collections.abc import Iterator
 
     import pandas as pd
 
     from textalyzer_spark.functions.alphabet import jvm_lower as _jl
+    from textalyzer_spark.functions.tokenize import ws_tokens
 
-    ws = re.compile(WS_SPLIT)
     mg = list(merges)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -200,7 +201,7 @@ def bpe_token_counts(
         for pdf in batches:
             ids, n_words, n_toks = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                words = [w for w in ws.split(_jl(text or "")) if w]
+                words = ws_tokens(_jl(text or ""))
                 total = 0
                 for w in words:
                     n = cache.get(w)

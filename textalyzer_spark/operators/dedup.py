@@ -21,7 +21,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from textalyzer_spark.functions.hashing import md5_le8
-from textalyzer_spark.operators.shingles import doc_shingles
+from textalyzer_spark.operators.shingles import (
+    _doc_kgram_counts,
+    doc_feature_counts,
+    token_kgrams,
+)
 
 # Mersenne prime 2^31-1: the base hash is reduced mod p BEFORE the
 # affine transform, so a,b,(x mod p) < p and a*x + b < 2^62 — exact in
@@ -41,81 +45,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
-
-
-def _distinct_shingles(
-    df: DataFrame,
-    k: int,
-    id_col: str,
-    text_col: str,
-    sig_params: tuple[int, int] | None = None,
-) -> DataFrame:
-    """DISTINCT ``(doc_id, shingle)`` — deduplicated IN THE KERNEL:
-    duplicates can only occur within a document, so emitting each
-    doc's shingle set (insertion-ordered dict keys) makes the rows
-    globally distinct with no corpus-wide distinct shuffle (round 8;
-    the winnow-fingerprint discipline). Multiset-identical to
-    ``doc_shingles(...).distinct()``.
-
-    ``sig_params=(num_hashes, seed)`` additionally emits ONE
-    signature row per document (``shingle`` NULL, ``signature`` = the
-    minhash vector from :func:`_signature_fn`, the same math
-    :func:`minhash_signatures` runs) interleaved with the shingle
-    rows — one kernel pass and ONE materialization carry both the
-    exact-verify shingles and the band-cut signatures (round 8: at
-    bench scale these composition gates are bounded by job/barrier
-    count, not data). :func:`shingle_signatures` materializes and
-    slices that output; use it rather than slicing by hand."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from textalyzer_spark.functions.tokenize import tokenize_text
-
-    sig = _signature_fn(*sig_params) if sig_params is not None else None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, shingles = [], []
-            sig_ids, sig_vals = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tokenize_text(text or "")
-                n = len(toks) - k + 1
-                if n <= 0:
-                    continue
-                ss = dict.fromkeys(
-                    " ".join(toks[i : i + k]) for i in range(n)
-                )
-                ids.extend([doc_id] * len(ss))
-                shingles.extend(ss)
-                if sig is not None:
-                    sig_ids.append(doc_id)
-                    sig_vals.append(sig(ss))
-            if sig is None:
-                yield pd.DataFrame({"doc_id": ids, "shingle": shingles})
-                continue
-            # object dtypes throughout: an all-short-doc batch yields
-            # empty lists, and pandas' default float64 empty column is
-            # not Arrow-convertible to list<int64> (same guard as
-            # minhash_signatures)
-            n_sh, n_sig = len(ids), len(sig_ids)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids + sig_ids, dtype="object"),
-                    "shingle": pd.Series(
-                        shingles + [None] * n_sig, dtype="object"
-                    ),
-                    "signature": pd.Series(
-                        [None] * n_sh + sig_vals, dtype="object"
-                    ),
-                }
-            )
-
-    id_type = dict(df.dtypes).get(id_col, "string")
-    schema = f"doc_id {id_type}, shingle string"
-    if sig is not None:
-        schema += ", signature array<bigint>"
-    return df.select(id_col, text_col).mapInPandas(run, schema)
 
 
 class ShingleSignatures(NamedTuple):
@@ -141,12 +70,60 @@ def shingle_signatures(
     (localCheckpoint), sliced into the distinct-shingle rows and the
     per-doc signature rows. Every consumer — the band cut, exact
     verify, a stored signature catalog, a cross-catalog band join —
-    reads this checkpoint instead of re-running the kernel. Signatures
-    are value-identical to :func:`minhash_signatures` (same
-    :func:`_signature_fn`)."""
-    raw = _distinct_shingles(
-        df, k, id_col, text_col, sig_params=(num_hashes, seed)
-    ).localCheckpoint()
+    reads this checkpoint instead of re-running the kernel.
+
+    Its own kernel, not :func:`doc_feature_counts`, because it is the
+    one pass that feeds both the band cut and exact verify on the
+    ``clean`` path. Each document emits its distinct shingles
+    (insertion-ordered dict keys — duplicates only occur within a
+    document, so the rows are globally distinct with no distinct
+    shuffle) and ONE signature row (``shingle`` NULL, ``signature``
+    from :func:`_signature_fn`, value-identical to
+    :func:`minhash_signatures`)."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
+
+    sig = _signature_fn(num_hashes, seed)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, shingles = [], []
+            sig_ids, sig_vals = [], []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                ss = dict.fromkeys(kgrams(tokenize_text(text or ""), k))
+                if not ss:
+                    continue
+                ids.extend([doc_id] * len(ss))
+                shingles.extend(ss)
+                sig_ids.append(doc_id)
+                sig_vals.append(sig(ss))
+            # object dtypes throughout: an all-short-doc batch yields
+            # empty lists, and pandas' default float64 empty column is
+            # not Arrow-convertible to list<int64>
+            n_sh, n_sig = len(ids), len(sig_ids)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids + sig_ids, dtype="object"),
+                    "shingle": pd.Series(
+                        shingles + [None] * n_sig, dtype="object"
+                    ),
+                    "signature": pd.Series(
+                        [None] * n_sh + sig_vals, dtype="object"
+                    ),
+                }
+            )
+
+    id_type = dict(df.dtypes).get(id_col, "string")
+    raw = (
+        df.select(id_col, text_col)
+        .mapInPandas(
+            run, f"doc_id {id_type}, shingle string, signature array<bigint>"
+        )
+        .localCheckpoint()
+    )
     return ShingleSignatures(
         shingles=raw.filter(F.col("shingle").isNotNull()).select(
             "doc_id", "shingle"
@@ -169,8 +146,8 @@ def ngram_jaccard_pairs(
     ``(doc_a, doc_b, jaccard)`` for pairs with similarity >= threshold,
     jaccard rounded to 4 decimals, doc_a < doc_b.
 
-    Shuffles: distinct shingles (1), self-join on shingle (2),
-    pair aggregation (3).
+    Shuffles: self-join on shingle (1), pair aggregation (2); the
+    kernel's (doc, shingle) rows are distinct by construction.
 
     ``max_doc_freq`` (default ON) drops shingles appearing in more
     than that many documents BEFORE the self-join — the skew/scale
@@ -183,7 +160,7 @@ def ngram_jaccard_pairs(
     :func:`minhash_lsh_pairs`, which replaces the full self-join with
     banded buckets.
     """
-    sh = _distinct_shingles(df, k, id_col, text_col)
+    sh = _doc_kgram_counts(df, k, id_col, text_col).select("doc_id", "shingle")
     # the shingle table fans out to sizes, the doc-freq cap, and both
     # self-join sides — materialize once instead of re-tokenizing the
     # corpus per consumer (same pattern as winnow_pairs /
@@ -276,7 +253,9 @@ def minhash_signatures(
     Arrow-batched: one kernel pass tokenizes, shingles and applies
     :func:`_signature_fn` per doc — the signature-only twin of the
     :func:`shingle_signatures` kernel, for callers that need no
-    shingle table (catalog builds, streaming).
+    shingle table (catalog builds, streaming; the ``ingest`` path).
+    Kept separate: routing it through :func:`shingle_signatures` would
+    add the shingle rows and a checkpoint these callers never read.
 
     A pure-Catalyst formulation (transform + array_min per
     permutation) was tried first: higher-order-function lambdas
@@ -288,7 +267,7 @@ def minhash_signatures(
 
     import pandas as pd
 
-    from textalyzer_spark.functions.tokenize import tokenize_text
+    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
 
     sig = _signature_fn(num_hashes, seed)
 
@@ -300,12 +279,7 @@ def minhash_signatures(
                 if len(toks) < k:
                     continue
                 doc_ids.append(doc_id)
-                sigs.append(
-                    sig({
-                        " ".join(toks[i : i + k])
-                        for i in range(len(toks) - k + 1)
-                    })
-                )
+                sigs.append(sig(set(kgrams(toks, k))))
             # explicit object dtype: a non-empty batch whose docs are
             # ALL too short yields empty lists, and pandas' default
             # float64 empty column is not Arrow-convertible to
@@ -477,7 +451,6 @@ def contamination_stats(
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bench_id_col: str = "doc_id",
     bench_text_col: str = "text",
 ) -> DataFrame:
     """Benchmark-contamination detection (the decontamination step of
@@ -501,7 +474,7 @@ def contamination_stats(
     NULL fraction."""
     return contamination_from_catalog(
         df,
-        benchmark_gram_catalog(benchmark, k, bench_id_col, bench_text_col),
+        benchmark_gram_catalog(benchmark, k, bench_text_col),
         k=k,
         id_col=id_col,
         text_col=text_col,
@@ -511,7 +484,6 @@ def contamination_stats(
 def benchmark_gram_catalog(
     benchmark: DataFrame,
     k: int = 8,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """The persistable decontamination state: the benchmark corpus's
@@ -523,8 +495,10 @@ def benchmark_gram_catalog(
     union-distinct: merge(cat(A), cat(B)) == cat(A ∪ B) exactly —
     the membership analog of the sketch-family merges)."""
     return (
-        doc_shingles(benchmark, k, id_col, text_col)
-        .select("shingle")
+        doc_feature_counts(
+            benchmark.select(F.col(text_col).alias("text")), token_kgrams(k)
+        )
+        .select(F.col("feature").alias("shingle"))
         .distinct()
     )
 
@@ -557,7 +531,7 @@ def contamination_from_catalog(
     asserted to have exactly ``k`` space-joined tokens while the
     broadcast relation is built — zero extra jobs, and a stale or
     mis-parameterized catalog fails loudly instead of passing."""
-    sh = doc_shingles(df, k, id_col, text_col)
+    sh = _doc_kgram_counts(df, k, id_col, text_col)
     # the assertion rides the _hit payload column, NOT the join key:
     # wrapping the key itself changed the projection's statistics and
     # degraded the downstream per-doc join in the static plan
@@ -581,9 +555,13 @@ def contamination_from_catalog(
         "shingle",
         "left",
     )
+    # per-doc kernel rows carry the occurrence count n: occurrences
+    # are sum(n), and a doc with no hit sums to 0, not NULL
     per_doc = marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kgrams"),
-        F.count("_hit").alias("n_contaminated"),
+        F.sum("n").alias("n_kgrams"),
+        F.sum(F.when(F.col("_hit").isNotNull(), F.col("n")).otherwise(0)).alias(
+            "n_contaminated"
+        ),
     )
     all_docs = df.select(F.col(id_col).alias("doc_id")).distinct()
     return (
@@ -628,16 +606,14 @@ def contamination_by_benchmark(
     are still benchmark-sized (distinct), broadcast under AQE; the
     corpus side is one shingle pass + broadcast join + one groupBy on
     (doc_id, bench_doc)."""
-    sh = doc_shingles(df, k, id_col, text_col)
-    bsh = (
-        doc_shingles(benchmark, k, bench_id_col, bench_text_col)
-        .select(F.col("doc_id").alias("bench_doc"), "shingle")
-        .distinct()
+    sh = _doc_kgram_counts(df, k, id_col, text_col)
+    bsh = _doc_kgram_counts(benchmark, k, bench_id_col, bench_text_col).select(
+        F.col("doc_id").alias("bench_doc"), "shingle"
     )
     return (
         sh.join(F.broadcast(bsh), "shingle")
         .groupBy("doc_id", "bench_doc")
-        .agg(F.count(F.lit(1)).alias("n_overlap_kgrams"))
+        .agg(F.sum("n").alias("n_overlap_kgrams"))
     )
 
 

@@ -33,16 +33,13 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from textalyzer_spark.functions.tokenize import ws_tokens
+from textalyzer_spark.operators.shingles import doc_feature_counts
+
 LL_SCALE = 1_000_000
-
-
-def _ws_tokens(text_col: str) -> Column:
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
-    return F.filter(F.split(F.col(text_col), WS_SPLIT), lambda t: t != "")
 
 
 def tfidf_topk_terms(
@@ -62,14 +59,14 @@ def tfidf_topk_terms(
     Output: ``(doc_id, tok, tf bigint, score_micro bigint, rank int)``
     ordered by ``(doc_id, rank)``.
     """
-    # per-doc term frequencies straight from the kernel (round 8 —
-    # the shingle_dup/dsir discipline): term duplicates only occur
-    # within one document, so the kernel's (doc_id, tok, tf) rows are
-    # the tf table with NO explode and NO aggregation shuffle, the
-    # materialization shrinks from occurrence rows to per-doc-distinct
-    # rows, and df_t becomes a plain count(*) of one-per-doc rows —
-    # the two-phase count_distinct disappears from the plan
-    tf = _doc_term_counts(df, id_col, text_col)
+    # per-doc term frequencies straight from the per-document kernel:
+    # its (doc_id, tok, tf) rows are the tf table with NO explode and
+    # NO aggregation shuffle, and df_t is a plain count(*) of
+    # one-per-doc rows (no two-phase count_distinct)
+    tf = doc_feature_counts(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+        ws_tokens,
+    ).select("doc_id", F.col("feature").alias("tok"), F.col("n").alias("tf"))
     tf = tf.localCheckpoint()  # vocab roll-up + scoring reuse
     n_docs = df.select(F.col(id_col)).distinct().count()
 
@@ -101,47 +98,6 @@ def tfidf_topk_terms(
         .filter(F.col("rank") <= k)
         .orderBy("doc_id", "rank")
     )
-
-
-def _doc_term_counts(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """``(doc_id, tok, tf)`` — each document's whitespace-token
-    frequency table from the kernel (round 8): one row per (document,
-    distinct token), exactly ``explode(_ws_tokens) -> groupBy(doc_id,
-    tok).count()`` with no explode and no shuffle (per-doc counting
-    needs no cross-partition merge). Tokenization is Python ``re``
-    over the pinned ``alphabet.WS_SPLIT``."""
-    import re
-    from collections import Counter
-    from collections.abc import Iterator
-
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
-    ws_re = re.compile(WS_SPLIT)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, toks_o, tfs = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                c = Counter(
-                    w for w in ws_re.split(text or "") if w != ""
-                )
-                ids.extend([doc_id] * len(c))
-                toks_o.extend(c.keys())
-                tfs.extend(c.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="object"),
-                    "tok": pd.Series(toks_o, dtype="object"),
-                    "tf": pd.Series(tfs, dtype="int64"),
-                }
-            )
-
-    id_type = dict(df.dtypes).get(id_col, "string")
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col)
-    ).mapInPandas(run, f"doc_id {id_type}, tok string, tf long")
 
 
 def collocations_pmi(

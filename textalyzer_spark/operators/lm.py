@@ -45,15 +45,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from textalyzer_spark.functions.tokenize import ws_tokens, ws_tokens_col
+
 LL_SCALE = 1_000_000  # micro-nats per nat
-
-
-def _ws_tokens(text_col: str) -> Column:
-    """Non-empty whitespace-split tokens under the pinned cross-engine
-    class ``alphabet.WS_SPLIT`` (never ``\\s`` — CLAUDE.md rule)."""
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
-    return F.filter(F.split(F.col(text_col), WS_SPLIT), lambda t: t != "")
 
 
 def _batch_ngram_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -63,27 +57,24 @@ def _batch_ngram_counts(df: DataFrame, text_col: str) -> DataFrame:
     pass, so the histogram shuffles are bounded by per-batch
     vocabulary instead of token occurrences, and the interpreted
     zip_with/slice bigram explode disappears. Global histograms are
-    exact sums of the batch counts; tokenization is Python ``re``
-    over the pinned ``alphabet.WS_SPLIT`` (identical to the JVM
-    ``_ws_tokens`` split — the cross-engine class both engines parse
-    the same way). Used by keywords.collocations_pmi; A/B showed the
-    same shape NOT paying off inside lm_perplexity_bigram (the small
-    train slice makes the JVM explode cheaper than a python pass —
-    kept JVM there)."""
-    import re
+    exact sums of the batch counts; tokens are ``ws_tokens`` (the
+    Python twin of the JVM ``ws_tokens_col`` split). Used by
+    keywords.collocations_pmi; A/B showed the same shape NOT paying
+    off inside lm_perplexity_bigram (the small train slice makes the
+    JVM explode cheaper than a python pass — kept JVM there).
+
+    Kept apart from shingles.doc_feature_counts: it aggregates per
+    batch ACROSS documents, and per-document rows would grow
+    ``collocations_pmi``'s shuffle."""
     from collections import Counter
     from collections.abc import Iterator
-
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
-    ws_re = re.compile(WS_SPLIT)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             uni: Counter = Counter()
             bi: Counter = Counter()
             for text in pdf[text_col]:
-                toks = [w for w in ws_re.split(text or "") if w != ""]
+                toks = ws_tokens(text)
                 uni.update(toks)
                 bi.update(zip(toks, toks[1:]))
             toks_o = list(uni.keys()) + [c for c, _ in bi.keys()]
@@ -127,7 +118,7 @@ def train_unigram_lm(
     ``localCheckpoint``-ed because training is a multi-action pipeline
     (scalar aggregation + reuse — CLAUDE.md multi-ACTION rule).
     """
-    toks = df.select(F.explode(_ws_tokens(text_col)).alias("token"))
+    toks = df.select(F.explode(ws_tokens_col(text_col)).alias("token"))
     vocab = toks.groupBy("token").agg(F.count("*").alias("cnt")).localCheckpoint()
     row = vocab.agg(F.sum("cnt"), F.count("*")).first()
     total = int(row[0] or 0)
@@ -160,7 +151,7 @@ def score_perplexity(
         mdl = F.broadcast(mdl)
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode_outer(_ws_tokens(text_col)).alias("token"),
+        F.explode_outer(ws_tokens_col(text_col)).alias("token"),
     )
     joined = toks.join(mdl, "token", "left")
     per = joined.groupBy("doc_id").agg(
@@ -265,7 +256,7 @@ def lm_perplexity_bigram(
 
     def doc_tokens(frame: DataFrame) -> DataFrame:
         return frame.select(
-            F.col(id_col).alias("doc_id"), _ws_tokens(text_col).alias("toks")
+            F.col(id_col).alias("doc_id"), ws_tokens_col(text_col).alias("toks")
         )
 
     def bigrams(frame: DataFrame) -> DataFrame:
@@ -288,7 +279,7 @@ def lm_perplexity_bigram(
         )
 
     uni = (
-        train.select(F.explode(_ws_tokens(text_col)).alias("token"))
+        train.select(F.explode(ws_tokens_col(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint()
@@ -393,19 +384,14 @@ def score_perplexity_stateless(
     int64 sum + final division reproduce the batch path bit-for-bit
     (pinned by tests/test_lm.py::test_stateless_matches_batch).
     """
-    import re
-
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
     bc = df.sparkSession.sparkContext.broadcast((model_map, int(oov_ll_micro)))
-    ws_re = re.compile(WS_SPLIT)
 
     @F.pandas_udf("struct<n_tokens: int, sum_ll_micro: bigint>")
     def sc(texts: pd.Series) -> pd.DataFrame:
         mdl, oov = bc.value
         ns, sums = [], []
         for t in texts:
-            toks = [w for w in ws_re.split(t or "") if w != ""]
+            toks = ws_tokens(t)
             ns.append(len(toks))
             sums.append(sum(mdl.get(w, oov) for w in toks))
         return pd.DataFrame({"n_tokens": ns, "sum_ll_micro": sums})

@@ -293,7 +293,7 @@ def repetition_stats(
 
     import pandas as pd
 
-    from textalyzer_spark.functions.tokenize import tokenize_text
+    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -303,17 +303,13 @@ def repetition_stats(
                 n = len(toks)
                 out = {"doc_id": doc_id, "n_tokens": n}
                 for k, name in ((2, "dup_bigram_frac"), (3, "dup_trigram_frac")):
-                    grams = [
-                        " ".join(toks[i : i + k]) for i in range(n - k + 1)
-                    ]
+                    grams = kgrams(toks, k)
                     out[name] = (
                         (len(grams) - len(set(grams))) / len(grams)
                         if grams
                         else None
                     )
-                bigrams = Counter(
-                    " ".join(toks[i : i + 2]) for i in range(n - 1)
-                )
+                bigrams = Counter(kgrams(toks, 2))
                 out["top_bigram_frac"] = (
                     max(bigrams.values()) * 2 / n if bigrams else None
                 )
@@ -367,18 +363,15 @@ def bigram_novelty(
     table (partial aggregation applies), one equi-join back to the
     occurrence stream, one groupBy doc_id — all linear; no driver
     materialization anywhere."""
-    from textalyzer_spark.operators.shingles import _doc_shingle_counts
+    from textalyzer_spark.operators.shingles import _doc_kgram_counts
 
-    # per-doc bigram counts straight from the kernel (round 8 — the
-    # shingle_dup/tfidf discipline): one row per (document, distinct
-    # bigram) with its occurrence count, so the materialization and
-    # the doc-frequency join carry per-doc-distinct rows instead of
-    # occurrences, the doc frequency is a plain count(*) of
-    # one-per-doc rows (no two-phase count_distinct), and the per-doc
-    # roll-up weights by occ — identical occurrence-fraction values
-    occ = _doc_shingle_counts(
-        df, 2, id_col, text_col, with_doc_id=True
-    ).localCheckpoint()
+    # per-doc bigram counts straight from the per-document kernel: one
+    # row per (document, distinct bigram) with its occurrence count n,
+    # so the materialization and the doc-frequency join carry
+    # per-doc-distinct rows instead of occurrences, the doc frequency
+    # is a plain count(*) (no two-phase count_distinct), and the
+    # per-doc roll-up weights by n — identical occurrence fractions
+    occ = _doc_kgram_counts(df, 2, id_col, text_col).localCheckpoint()
     dfreq = occ.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("_df")
     )
@@ -386,12 +379,12 @@ def bigram_novelty(
         occ.join(dfreq, "shingle")
         .groupBy("doc_id")
         .agg(
-            F.sum("occ").alias("n_bigrams"),
+            F.sum("n").alias("n_bigrams"),
             F.sum(
-                F.when(F.col("_df") == 1, F.col("occ")).otherwise(0)
+                F.when(F.col("_df") == 1, F.col("n")).otherwise(0)
             ).alias("_novel"),
             F.sum(
-                F.when(F.col("_df") >= common_df, F.col("occ")).otherwise(0)
+                F.when(F.col("_df") >= common_df, F.col("n")).otherwise(0)
             ).alias("_common"),
         )
     )

@@ -45,9 +45,9 @@ def bm25_topk(
     Output: ``(doc_id, score_micro bigint, n_terms_matched int)``,
     ranked by ``(score_micro DESC, doc_id ASC)``, matching docs only.
     """
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
+    from textalyzer_spark.functions.tokenize import ws_tokens_col
 
-    toks_arr = F.filter(F.split(F.col(text_col), WS_SPLIT), lambda t: t != "")
+    toks_arr = ws_tokens_col(text_col)
     counts = df.select(
         F.col(id_col).alias("doc_id"), F.size(toks_arr).cast("long").alias("dl")
     )

@@ -28,19 +28,25 @@ target and raw histograms come from the SAME pass.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from textalyzer_spark.functions.hashing import md5_le8
+from textalyzer_spark.functions.tokenize import kgrams, ws_tokens, ws_tokens_col
+from textalyzer_spark.operators.shingles import doc_feature_counts
+
 LL_SCALE = 1_000_000
 
 
 def _doc_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, is_target, feat): unigrams + bigrams per document."""
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-
-    toks = F.filter(F.split(F.col(text_col), WS_SPLIT), lambda t: t != "")
+    """(doc_id, is_target, feat): unigrams + bigrams per document, as
+    JVM occurrence rows. No engine path uses it: it stays as the JVM
+    reference the kernel histogram is checked against
+    (tests/test_retrieval_selection.py)."""
+    toks = ws_tokens_col(text_col)
     base = df.select(
         F.col(id_col).alias("doc_id"), F.col("is_target"), toks.alias("toks")
     )
@@ -62,72 +68,33 @@ def _doc_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return uni.unionByName(bi)
 
 
+def _bucket_features(text: str, n_buckets: int) -> list[int]:
+    """A document's DSIR features, one per occurrence: its whitespace
+    unigrams and space-joined bigrams, each hashed to
+    ``md5_le8(f) % n_buckets`` (functions/hashing.py — the exact value
+    the JVM ``md5_le8_col`` + pmod chain produces). Shared by the batch
+    histogram and :func:`dsir_score_stateless`."""
+    toks = ws_tokens(text)
+    return [md5_le8(f) % n_buckets for f in toks + kgrams(toks, 2)]
+
+
 def _doc_bucket_counts(
     flagged: DataFrame, n_buckets: int, id_col: str, text_col: str
 ) -> DataFrame:
     """``(doc_id, is_target, bucket, cnt)`` — each document's hashed
-    uni+bigram feature-bucket histogram, computed IN THE KERNEL:
-    bucket duplicates can only occur within one document, so the rows
-    are globally distinct by construction and the per-occurrence
-    feature explode + md5-hex-conv chain + (doc, bucket) hash-agg
-    shuffle all disappear (round 8 — the shingle-kernel discipline).
-    Feature hashing is Python ``md5_le8(f) % n_buckets``
-    (functions/hashing.py — the exact value the JVM ``md5_le8_col``
-    + pmod chain produces) and
-    tokenization is Python ``re`` over the pinned
-    ``alphabet.WS_SPLIT`` — the identities already pinned for
-    :func:`dsir_score_stateless`. Row-set identical to
-    ``_doc_features`` → hash → groupBy(doc_id, bucket)."""
-    import re
-    from collections import Counter
-    from collections.abc import Iterator
-
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-    from textalyzer_spark.functions.hashing import md5_le8
-
-    ws_re = re.compile(WS_SPLIT)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tgts, bks, cnts = [], [], [], []
-            for doc_id, text, tgt in zip(
-                pdf["doc_id"], pdf[text_col], pdf["is_target"]
-            ):
-                toks = [w for w in ws_re.split(text or "") if w != ""]
-                if not toks:
-                    continue
-                feats = toks + [
-                    toks[i] + " " + toks[i + 1]
-                    for i in range(len(toks) - 1)
-                ]
-                c = Counter(md5_le8(f) % n_buckets for f in feats)
-                # NULL target flags stay NULL (the JVM bool_or / where
-                # semantics): pandas renders them as None/NaN
-                tg = (
-                    None
-                    if tgt is None or (isinstance(tgt, float) and tgt != tgt)
-                    else bool(tgt)
-                )
-                ids.extend([doc_id] * len(c))
-                tgts.extend([tg] * len(c))
-                bks.extend(c.keys())
-                cnts.extend(c.values())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_target": tgts,
-                    "bucket": pd.Series(bks, dtype="int64"),
-                    "cnt": pd.Series(cnts, dtype="int64"),
-                }
-            )
-
-    id_type = dict(flagged.dtypes).get(id_col, "string")
-    return flagged.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col), F.col("is_target")
-    ).mapInPandas(
-        run,
-        f"doc_id {id_type}, is_target boolean, bucket long, cnt long",
-    )
+    uni+bigram feature-bucket histogram from the per-document kernel
+    (shingles.doc_feature_counts): no per-occurrence feature explode,
+    md5-hex-conv chain or (doc, bucket) hash-agg shuffle. Row-set
+    identical to ``_doc_features`` → hash → groupBy(doc_id, bucket)."""
+    return doc_feature_counts(
+        flagged.select(
+            F.col(id_col).alias("doc_id"),
+            "is_target",
+            F.col(text_col).alias("text"),
+        ),
+        partial(_bucket_features, n_buckets=n_buckets),
+        "long",
+    ).withColumnsRenamed({"feature": "bucket", "n": "cnt"})
 
 
 def _lam_udf(tt: int, tr: int, n_buckets: int):
@@ -277,36 +244,22 @@ def dsir_score_stateless(
     explode, no aggregation — so it runs append-mode on an unbounded
     stream. Feature hashing is Python ``md5_le8(f) % n_buckets``
     (functions/hashing.py — the same value the JVM ``md5_le8_col`` +
-    pmod chain produces);
-    tokenization is Python ``re`` over the pinned
-    ``alphabet.WS_SPLIT``. Bit-identical to the batch scorer on the
+    pmod chain produces) over the batch histogram's own
+    :func:`_bucket_features`. Bit-identical to the batch scorer on the
     training corpus (pinned by tests); unseen buckets score
     ``lam_unseen_micro``."""
-    import re
-
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
-    from textalyzer_spark.functions.hashing import md5_le8
-
     bc = df.sparkSession.sparkContext.broadcast(
         (dict(lam_map), int(lam_unseen_micro), int(n_buckets))
     )
-    ws_re = re.compile(WS_SPLIT)
 
     @F.pandas_udf("struct<n_feats: int, weight_micro: bigint>")
     def sc(texts: pd.Series) -> pd.DataFrame:
         lam, unseen, nb = bc.value
         ns, ws = [], []
         for t in texts:
-            toks = [w for w in ws_re.split(t or "") if w != ""]
-            feats = toks + [
-                toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)
-            ]
-            w = 0
-            for f in feats:
-                b = md5_le8(f) % nb
-                w += lam.get(b, unseen)
+            feats = _bucket_features(t, nb)
             ns.append(len(feats))
-            ws.append(w)
+            ws.append(sum(lam.get(b, unseen) for b in feats))
         return pd.DataFrame({"n_feats": ns, "weight_micro": ws})
 
     base = df.select(

@@ -96,29 +96,19 @@ def streaming_contamination(
 
     import pandas as pd
 
-    from textalyzer_spark.operators.shingles import doc_shingles
+    from textalyzer_spark.operators.dedup import benchmark_gram_catalog
 
-    bench = {
-        r["shingle"]
-        for r in doc_shingles(benchmark, k)
-        .select("shingle")
-        .distinct()
-        .collect()
-    }
+    bench = {r["shingle"] for r in benchmark_gram_catalog(benchmark, k).collect()}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from textalyzer_spark.functions.tokenize import tokenize_text
+        from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
 
         for pdf in batches:
             ids, n_kg, n_ct, frac = [], [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = tokenize_text(text or "")
-                n = max(0, len(toks) - k + 1)
-                hits = sum(
-                    1
-                    for i in range(n)
-                    if " ".join(toks[i : i + k]) in bench
-                )
+                grams = kgrams(tokenize_text(text or ""), k)
+                n = len(grams)
+                hits = sum(1 for g in grams if g in bench)
                 ids.append(doc_id)
                 n_kg.append(n)
                 n_ct.append(hits)
@@ -601,7 +591,7 @@ def streaming_sketch_maintenance(
     pipeline pages on when a crawl's content shifts (first batch has
     no prior: NULL tv_distance), with the merged histogram committed
     as the next snapshot exactly like 'hist'."""
-    from textalyzer_spark.functions.alphabet import WS_SPLIT
+    from textalyzer_spark.functions.tokenize import ws_tokens_col
     from textalyzer_spark.operators import incremental as inc
     from textalyzer_spark.operators import sketch as sk
 
@@ -615,11 +605,7 @@ def streaming_sketch_maintenance(
         prev = inc.latest_catalog_snapshot(
             sp, catalog_dir, max_snapshot=slot - 1
         )
-        toks = batch_df.select(
-            F.explode(
-                F.filter(F.split(F.col("text"), WS_SPLIT), lambda t: t != "")
-            ).alias("tok")
-        )
+        toks = batch_df.select(F.explode(ws_tokens_col("text")).alias("tok"))
         if kind == "hll":
             batch_sk = sk.hll_registers(toks, "tok", p=p, salt=salt)
             cat = (

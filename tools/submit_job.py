@@ -207,17 +207,11 @@ def main(argv: list[str] | None = None) -> None:
                 raise SystemExit("--catalog required for corpus_stats")
             from pyspark.sql import functions as F
 
-            from textalyzer_spark.functions.alphabet import WS_SPLIT
+            from textalyzer_spark.functions.tokenize import ws_tokens_col
             from textalyzer_spark.operators import incremental as inc
             from textalyzer_spark.operators import sketch as sk
 
-            toks = docs.select(
-                F.explode(
-                    F.filter(
-                        F.split(F.col("text"), WS_SPLIT), lambda t: t != ""
-                    )
-                ).alias("tok")
-            )
+            toks = docs.select(F.explode(ws_tokens_col("text")).alias("tok"))
             hll = sk.hll_registers(toks, "tok")
             cms = sk.cms_table(toks, "tok")
             try:
