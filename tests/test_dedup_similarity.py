@@ -115,7 +115,7 @@ def test_minhash_signature_kernels_agree(spark):
     the identical signature for every doc with >= k tokens, and no
     row for shorter docs. Short docs, repeated shingles and non-ASCII
     tokens included."""
-    from textalyzer_spark.functions.tokenize import tokenize_text
+    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
     from textalyzer_spark.operators.dedup import shingle_signatures
     from textalyzer_spark.operators.incremental import (
         minhash_catalog,
@@ -149,12 +149,163 @@ def test_minhash_signature_kernels_agree(spark):
         }
 
     only = sig_map(minhash_catalog(df, k=k, num_hashes=nh))
-    built = sig_map(shingle_signatures(df, k=k, num_hashes=nh).signatures)
+    sets_df = shingle_signatures(df, k=k, num_hashes=nh).sets
+    built = sig_map(sets_df)
+    sets = sets_df.collect()
     comp = sig_map(
         minhash_component_catalog(df, k=k, num_hashes=nh, bands=4)
     )
     assert set(only) == want_ids
     assert only == built == comp
+    # the set side of the same rows: each doc's distinct shingles, once
+    assert all(len(r["shingles"]) == len(set(r["shingles"])) for r in sets)
+    assert {r["doc_id"]: set(r["shingles"]) for r in sets} == {
+        i: set(kgrams(tokenize_text(texts[i]), k)) for i in want_ids
+    }
+
+
+def _spark_round4(x: float) -> float:
+    """Spark's ``round(x, 4)`` on a double: HALF_UP on the double's
+    shortest decimal repr (so 0.49995 rounds up, unlike Python's
+    ``round``)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _ref_sets(rows, k):
+    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
+
+    sets = {d: set(kgrams(tokenize_text(t or ""), k)) for d, t in rows}
+    return {d: s for d, s in sets.items() if s}
+
+
+def _ref_pairs(sets, threshold):
+    """Every pair with Spark-rounded Jaccard >= threshold, in plain
+    Python: ``{(doc_a, doc_b): jaccard}``."""
+    ids = sorted(sets)
+    out = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets[a] & sets[b])
+            if inter:
+                j = _spark_round4(inter / len(sets[a] | sets[b]))
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
+def test_minhash_size_ratio_prune_loses_no_pair(spark):
+    """The size-ratio prune runs before the intersect and must be
+    lossless against round(j, 4) >= t. The boundary docs are nested
+    prefixes of one 20,001-token doc: a 9,999-of-20,000 subset has
+    j = 0.49995, which rounds up to 0.5 and is kept at t = 0.5, though
+    its size ratio is below t (a prune of min/max >= t would lose it);
+    9,998 of 20,000 rounds to 0.4999 and is dropped. One band per hash
+    makes every pair with j >= 0.3 a candidate (miss odds 0.7^64)."""
+    from itertools import product
+
+    from textalyzer_spark.functions.tokenize import kgrams
+
+    words = ["".join(p) for p in product("abcdefghijklmnopqrstuvwxyz", repeat=4)]
+    big = words[:20001]  # 20,000 distinct 2-grams
+    rows = [
+        (1, " ".join(big)),
+        (2, " ".join(big[:10000])),  # 9,999 of them: j = 0.49995
+        (3, " ".join(big[:9999])),  # 9,998: j = 0.4999
+        (4, " ".join(big[:14000])),
+        (5, " ".join(words[30000:30010])),
+        (6, " ".join(words[30000:30006] + words[40000:40004])),
+        (7, " ".join(words[30000:30005] + words[40000:40005])),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    t = 0.5
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in minhash_lsh_pairs(
+            df, k=2, num_hashes=64, bands=64, threshold=t
+        ).collect()
+    }
+    want = _ref_pairs(_ref_sets(rows, 2), t)
+    assert got == want
+    assert want[(1, 2)] == 0.5 and (1, 3) not in want
+    sizes = {d: len(kgrams(text.split(), 2)) for d, text in rows}
+    assert sizes[2] < t * sizes[1]  # kept below the naive ratio bound
+
+
+@pytest.mark.parametrize("batch_rows", [7, 8192])
+def test_minhash_kernel_hostile_inputs(spark, batch_rows):
+    """The columnar shingle-set kernel against kgrams(tokenize_text)
+    sets in plain Python, over the inputs that take it off its ASCII
+    fast path or across a slice seam: set contents and sizes,
+    signatures (the affine permutations written out), and the
+    verified Jaccard values. One partition of more rows than one
+    kernel slice, with the hostile docs on both sides of the seam, at
+    Arrow batches of 7 rows and of 8,192."""
+    import random
+
+    from textalyzer_spark.functions.hashing import md5_le8
+    from textalyzer_spark.functions.tokenize import SLICE_ROWS
+    from textalyzer_spark.operators.dedup import _P, _hash_params, shingle_signatures
+
+    long_doc = " ".join(f"w{chr(97 + i % 26)}{chr(97 + i // 26 % 26)}x" for i in range(3000))
+    hostile = [
+        None,
+        "",
+        "solo",
+        "two words",
+        "  ,,, !! 42 ",
+        "la la la la la la la la",  # one shingle, repeated
+        "the cat sat on the mat the cat sat on the mat again",
+        "ΟΔΥΣΣΕΥΣ ΣΟΦΟΣ ΚΑΙ ΠΟΛΥΤΡΟΠΟΣ ΑΝΗΡ ΟΔΥΣΣΕΥΣ ΣΟΦΟΣ",  # final sigma
+        "Ça déjà vu — naïve café Größe straße ÉCOLE",
+        "the cat’s toy is on the mat and the cat’s bed too",  # curly quote
+        "the cat's toy is on the mat and the cat's bed too",
+        long_doc,
+        long_doc.replace("wabx", "zzzz"),
+    ]
+    rng = random.Random(5)
+    filler = [
+        " ".join(
+            "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(6))
+            for _ in range(rng.randint(0, 12))
+        )
+        for _ in range(SLICE_ROWS + 40)
+    ]
+    texts = hostile + filler[: SLICE_ROWS - 6] + hostile + filler[SLICE_ROWS - 6 :]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1)
+    k, nh = 3, 16
+    want = _ref_sets(rows, k)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        built = shingle_signatures(df, k=k, num_hashes=nh)
+        got = built.sets.collect()
+        pairs = minhash_lsh_pairs(
+            df, k=k, num_hashes=nh, bands=nh, threshold=0.0, shingle_sigs=built
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert built.sets.count() == len(want)
+    assert {r["doc_id"]: len(r["shingles"]) for r in got} == {
+        d: len(s) for d, s in want.items()
+    }
+    assert {r["doc_id"]: set(r["shingles"]) for r in got} == want
+    av, bv = _hash_params(nh, 42)
+    assert {r["doc_id"]: list(r["signature"]) for r in got} == {
+        d: [min((md5_le8(x) % _P * a + b) % _P for x in s) for a, b in zip(av, bv)]
+        for d, s in want.items()
+    }
+    ref = _ref_pairs(want, 0.0)
+    got_pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs}
+    assert all(ref[p] == j for p, j in got_pairs.items())
+    # every pair at j >= 0.5 is a candidate in one of 16 one-hash bands
+    # (miss odds 0.5^16 per pair), the curly/straight-quote twins and
+    # the long-doc copies among them
+    assert {p for p, j in ref.items() if j >= 0.5} <= set(got_pairs)
+    assert (9, 10) in got_pairs and (11, 12) in got_pairs
 
 
 def test_simhash_properties(spark):
@@ -662,7 +813,7 @@ def test_minhash_kernels_tolerate_all_short_doc_batches(spark):
     )
     assert dd.minhash_signatures(docs, k=3, num_hashes=8).count() == 0
     built = dd.shingle_signatures(docs, k=3, num_hashes=8)
-    assert built.shingles.count() == 0
+    assert built.sets.count() == 0
     assert built.signatures.count() == 0
     assert dd.minhash_lsh_pairs(docs, k=3, num_hashes=16, bands=4).count() == 0
     assert token_shingle_duplicates(docs, k=3).count() == 0

@@ -94,6 +94,27 @@ def test_lsh_dedup_family_has_no_cartesian(spark, docs):
         assert "CartesianProduct" not in _executed_plan(q)
 
 
+def test_minhash_verify_is_set_level(docs):
+    """minhash_lsh_pairs verifies candidates against one row per
+    document: the plan intersects shingle arrays and has no join,
+    aggregate or exchange keyed on a shingle column (the per-shingle
+    verify it replaced shuffled pairs x shingles rows)."""
+    import re
+
+    from textalyzer_spark.operators.dedup import minhash_lsh_pairs
+
+    plan = _executed_plan(
+        minhash_lsh_pairs(docs.limit(50), k=3, num_hashes=16, bands=4, threshold=0.3)
+    )
+    assert "array_intersect" in plan
+    for keyed in (
+        r"Aggregate\(keys=\[[^\]]*shingle",
+        r"hashpartitioning\([^)]*shingle",
+        r"Join \[[^\]]*shingle",
+    ):
+        assert not re.search(keyed, plan), keyed
+
+
 def test_signatures_run_in_arrow_batches_not_interpreted_hofs(spark, docs):
     """The engine rule: per-element array math must run as Arrow-batch
     numpy (mapInPandas/mapInArrow nodes), never as interpreted
@@ -112,7 +133,9 @@ def test_signatures_run_in_arrow_batches_not_interpreted_hofs(spark, docs):
         ),
     ):
         plan = _executed_plan(q)
-        assert "MapInPandas" in plan or "PythonMapInArrow" in plan
+        # Spark 4 prints the Arrow node as MapInArrow (PythonMapInArrow
+        # in Spark 3)
+        assert "MapInPandas" in plan or "MapInArrow" in plan
 
 
 def test_embedding_queries_prune_to_needed_columns(spark):

@@ -18,10 +18,9 @@ from textalyzer_spark.corpus import (
     nested_from_texts,
 )
 from textalyzer_spark.functions.syllables import count_syllables
-from textalyzer_spark.functions.tokenize import tokenize_text
+from textalyzer_spark.functions.tokenize import SLICE_ROWS, tokenize_text
 from textalyzer_spark.operators.frequency import word_frequency
 from textalyzer_spark.operators.spans import (
-    _SLICE_ROWS,
     _span_metrics,
     process_spans,
     process_spans_arrow,
@@ -221,9 +220,9 @@ def mixed_corpus(spark):
                 + (" Ζεύς" if i % 50 == 0 else ""),
             ),
         )
-        for i in range(_SLICE_ROWS + 40)
+        for i in range(SLICE_ROWS + 40)
     ]
-    rows = special + filler[: _SLICE_ROWS - 4] + special + filler[_SLICE_ROWS - 4 :]
+    rows = special + filler[: SLICE_ROWS - 4] + special + filler[SLICE_ROWS - 4 :]
     rows = [(f"{k}_{i}", v) for i, (k, v) in enumerate(rows)]
     want = {doc_id: _python_metrics(spans) for doc_id, spans in rows}
     return spark.createDataFrame(rows, NESTED_SCHEMA).coalesce(1), want

@@ -134,34 +134,53 @@ def test_kgram_batch_kernel_large_k():
 
 
 def test_token_rules_defined_only_in_tokenize_module():
-    """The whitespace-token rule, its JVM twin and the token k-gram
-    join are defined once, in functions/tokenize.py (``ws_tokens``,
-    ``ws_tokens_col``, ``kgrams``). A re-inlined copy anywhere else in
-    the engine is a second definition that can drift from the
-    oracles' rule. Static scan; no Spark session.
+    """Each token rule and the MinHash permutation have one home. The
+    whitespace-token rule, its JVM twin and the token k-gram join
+    (``ws_tokens``, ``ws_tokens_col``, ``kgrams``) and the ASCII
+    letter-run rule (``_ASCII_RUN``, ``ascii_letter_runs``) live in
+    functions/tokenize.py; the MinHash affine permutation
+    ``(a*x + b) mod (2^31 - 1)`` lives in operators/dedup.py, with its
+    SQL twin in oracles.py. A re-inlined copy anywhere else in the
+    engine is a second definition that can drift from the oracles'
+    rule. Static scan; no Spark session.
 
     bpe's ``F.explode(F.split(F.lower(...), WS_SPLIT))`` word histogram
     lowercases and explodes before a row filter — a different rule —
-    and does not match."""
+    and does not match; neither does pii's ``[A-Za-z]{2,}`` e-mail
+    top-level domain."""
     import pathlib
     import re
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "textalyzer_spark"
-    allowed = {"functions/tokenize.py", "functions/alphabet.py", "oracles.py"}
+    ws_homes = {"functions/tokenize.py", "functions/alphabet.py", "oracles.py"}
     rules = [
-        re.compile(r"re\.compile\(\s*WS_SPLIT\s*\)"),
+        (ws_homes, re.compile(r"re\.compile\(\s*WS_SPLIT\s*\)")),
         # F.filter(F.split(<arg with one nesting level>, WS_SPLIT ...
-        re.compile(r"F\.filter\(\s*F\.split\((?:[^()]|\([^()]*\))*,\s*WS_SPLIT"),
-        re.compile(r'" "\.join\(\s*toks\['),
+        (
+            ws_homes,
+            re.compile(r"F\.filter\(\s*F\.split\((?:[^()]|\([^()]*\))*,\s*WS_SPLIT"),
+        ),
+        (ws_homes, re.compile(r'" "\.join\(\s*toks\[')),
+        # the ASCII letter run as a regex, and as byte arithmetic
+        ({"functions/tokenize.py"}, re.compile(r"\[A-Za-z\]\+|\[a-zA-Z\]\+")),
+        (
+            {"functions/tokenize.py"},
+            re.compile(r"""ord\(\s*["']a["']\s*\)|\|\s*0x20\b"""),
+        ),
+        # the Mersenne modulus of the permutation, by value or by name
+        (
+            {"operators/dedup.py", "oracles.py"},
+            re.compile(r"\(\s*1\s*<<\s*31\s*\)\s*-\s*1|2147483647|%\s*\{?_P\b"),
+        ),
     ]
     hits = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
-        if rel in allowed:
-            continue
         src = path.read_text(encoding="utf-8")
-        for rule in rules:
+        for homes, rule in rules:
+            if rel in homes:
+                continue
             for m in rule.finditer(src):
                 line = src.count("\n", 0, m.start()) + 1
                 hits.append(f"{rel}:{line}: {m.group(0)}")
-    assert not hits, "inlined token rule:\n" + "\n".join(hits)
+    assert not hits, "inlined token or permutation rule:\n" + "\n".join(hits)

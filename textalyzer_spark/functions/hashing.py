@@ -6,8 +6,9 @@ little-endian as an unsigned 64-bit int. It equals DuckDB's
 value-exact SQL twin. Python's builtin ``hash()`` is salted per
 process and must never stand in for it.
 
-Two forms with identical values: :func:`md5_le8` for Python/Arrow
-kernels, :func:`md5_le8_col` for JVM column expressions (computed
+Three forms with identical values: :func:`md5_le8` for one Python
+string, :func:`md5_le8_array` for a whole Arrow string array in a
+kernel, and :func:`md5_le8_col` for JVM column expressions (computed
 inside whole-stage codegen).
 """
 
@@ -22,6 +23,19 @@ from pyspark.sql import functions as F
 def md5_le8(s: str) -> int:
     """Python md5-LE8 of ``s`` (UTF-8)."""
     return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "little")
+
+
+def md5_le8_array(strings):
+    """md5-LE8 of every value of a pyarrow string array, as a numpy
+    uint64 array: the UTF-8 bytes are read straight from Arrow, and
+    the eight digest bytes of each value land in one buffer read
+    little-endian, so no Python int is built per value."""
+    import numpy as np
+    import pyarrow as pa
+
+    md5 = hashlib.md5
+    digests = b"".join([md5(b).digest()[:8] for b in strings.cast(pa.binary()).to_pylist()])
+    return np.frombuffer(digests, "<u8")
 
 
 def md5_le8_hex_col(c: Column) -> Column:

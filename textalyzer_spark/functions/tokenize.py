@@ -24,6 +24,12 @@ The other token rules live here too, each defined once:
   (non-empty pieces of a split on ``alphabet.WS_SPLIT``), in Python
   and as its JVM twin;
 * ``kgrams`` — the space-joined token k-gram (shingle) string.
+
+Arrow kernels tokenize a whole slice of rows at once:
+``ascii_letter_runs`` is the ASCII rule as numpy array operations,
+``token_table`` applies it to every ASCII row of a ``StringArray``
+(a non-ASCII row takes ``tokenize_text`` alone), and ``kgram_table``
+is ``kgrams`` over such a table.
 """
 
 from __future__ import annotations
@@ -55,6 +61,12 @@ _ALPHA_RUN = py_alpha_regex()
 _ASCII_RUN = re.compile(r"[A-Za-z]+")
 
 _WS_RE = re.compile(WS_SPLIT)
+
+# Rows per slice of an Arrow batch in the Arrow kernels that call
+# token_table: the columnar path holds several per-byte temporaries of
+# the slice's text, and whole 8,192-row batches raised the Python
+# workers' peak RSS by ~13% (perfbench extract, 4 cores) for no speed-up
+SLICE_ROWS = 1024
 
 
 def tokenize_text(text: str) -> list[str]:
@@ -104,6 +116,106 @@ def kgrams(toks: list[str], k: int) -> list[str]:
     rebuild as ``w || ' ' || lead(w, 1) ...``). Empty when
     ``len(toks) < k``."""
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _utf8_buffers(strings):
+    """``(row offsets from 0, uint8 bytes)`` of a StringArray's buffers."""
+    import numpy as np
+
+    _, offs_buf, data_buf = strings.buffers()
+    offs = np.frombuffer(offs_buf, np.int32)[strings.offset : strings.offset + len(strings) + 1]
+    if offs[-1] == offs[0]:
+        return offs - offs[0], np.zeros(0, np.uint8)
+    return offs - offs[0], np.frombuffer(data_buf, np.uint8)[offs[0] : offs[-1]]
+
+
+def ascii_letter_runs(row_at, buf):
+    """:func:`tokenize_text`'s ASCII rule as array operations:
+    ``(tokens, row_tok)`` for rows of ASCII text (``row_at``: the rows'
+    offsets into ``buf``, their UTF-8 bytes). A token is a maximal
+    ``[A-Za-z]`` run inside one row, lowered by ``| 0x20``; ``tokens``
+    is a StringArray of every token in order, and row ``r``'s tokens
+    are ``tokens[row_tok[r]:row_tok[r + 1]]``."""
+    import numpy as np
+    import pyarrow as pa
+
+    lower = buf | 0x20
+    alpha = np.zeros(len(buf) + 2, bool)
+    np.less(lower - ord("a"), 26, out=alpha[1:-1])  # uint8 wrap-around: [A-Za-z]
+    # letter runs start and end where alpha flips
+    flips = np.flatnonzero(alpha[1:] != alpha[:-1])
+    starts, ends = flips[0::2], flips[1::2]
+    # a run across a row boundary is two tokens (empty rows repeat a
+    # boundary)
+    cut = row_at[1:-1]
+    cut = np.unique(cut[alpha[cut] & alpha[cut + 1]])
+    if len(cut):
+        starts = np.insert(starts, np.searchsorted(starts, cut), cut)
+        ends = np.insert(ends, np.searchsorted(ends, cut), cut)
+    # the letters compacted are the tokens back to back
+    tok_at = np.zeros(len(starts) + 1, np.int32)
+    np.cumsum(ends - starts, out=tok_at[1:])
+    tokens = pa.StringArray.from_buffers(
+        len(starts), pa.py_buffer(tok_at), pa.py_buffer(lower.compress(alpha[1:-1]))
+    )
+    return tokens, np.searchsorted(starts, row_at)
+
+
+def token_table(texts):
+    """``(tokens, row_tok)`` as in :func:`ascii_letter_runs`, for every
+    row of a StringArray slice, with :func:`tokenize_text`'s values
+    (NULL text has no tokens). ASCII rows are tokenized together by
+    :func:`ascii_letter_runs`; a non-ASCII row falls back, alone, to
+    :func:`tokenize_text`, whose ``jvm_lower`` casing is Unicode-exact,
+    and its tokens are spliced in at its row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if texts.null_count:
+        texts = texts.fill_null("")
+    row_at, buf = _utf8_buffers(texts)
+    if not len(buf) or buf.max() < 0x80:
+        return ascii_letter_runs(row_at, buf)
+    is_ascii = pc.string_is_ascii(texts)
+    tokens, row_tok = ascii_letter_runs(*_utf8_buffers(pc.if_else(is_ascii, texts, "")))
+    other = np.flatnonzero(~is_ascii.to_numpy(zero_copy_only=False))
+    extra = [tokenize_text(t) for t in texts.take(pa.array(other)).to_pylist()]
+    # source position of each row's first token in tokens ++ extra
+    counts = np.diff(row_tok)
+    src_at = row_tok[:-1].copy()
+    n_extra = np.fromiter(map(len, extra), np.int64, count=len(extra))
+    counts[other] = n_extra
+    src_at[other] = len(tokens) + np.cumsum(n_extra) - n_extra
+    row_tok = np.zeros(len(texts) + 1, np.int64)
+    np.cumsum(counts, out=row_tok[1:])
+    src = np.repeat(src_at - row_tok[:-1], counts) + np.arange(row_tok[-1])
+    merged = pa.concat_arrays(
+        [tokens, pa.array([t for toks in extra for t in toks], pa.string())]
+    )
+    return merged.take(pa.array(src)), row_tok
+
+
+def kgram_table(tokens, row_tok, k: int):
+    """:func:`kgrams` over a :func:`token_table`: ``(grams, rows)`` — a
+    StringArray of every token ``k``-gram of every row, one per
+    occurrence, and the row each came from (int64). A k-gram never
+    crosses a row boundary."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(tokens) - k + 1
+    if n <= 0:
+        return pa.array([], pa.string()), np.zeros(0, np.int64)
+    row_of = np.repeat(np.arange(len(row_tok) - 1), np.diff(row_tok))
+    # tokens of one row are contiguous: a k-gram stays inside its row
+    # iff its first and last tokens share the row
+    at = np.flatnonzero(row_of[:n] == row_of[k - 1 :])
+    grams = pc.binary_join_element_wise(
+        *[tokens.slice(i, n) for i in range(k)], " "
+    )
+    return grams.take(pa.array(at)), row_of[at]
 
 
 def tokenize_pandas(s: pd.Series) -> pd.Series:

@@ -10,11 +10,16 @@ band hash, simhash chunk). Partial aggregation and AQE skew splitting
 apply automatically; signature computation is per-row (no shuffle) —
 MinHash and SimHash both in Arrow-batched numpy (the Catalyst
 higher-order-function versions ran interpreted and ~20-50x slower).
+MinHash emits ONE row per document (its distinct-shingle set and its
+signature), and its exact verify joins candidates to that row on
+``doc_id`` — no shingle-keyed shuffle: the verify traffic is
+candidates x set bytes, so one very long document costs once per
+candidate pair it is in. Every MinHash operator assumes a unique
+``doc_id``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Collection
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -48,14 +53,20 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 class ShingleSignatures(NamedTuple):
-    """One materialized shingle+signature build of a corpus (see
-    :func:`shingle_signatures`)."""
+    """One materialized shingle-set + signature build of a corpus (see
+    :func:`shingle_signatures`). Precondition: ``doc_id`` is unique —
+    two rows with one id would each carry their own set, and a join on
+    ``doc_id`` would pair them with each other's candidates."""
 
-    #: DISTINCT ``(doc_id, shingle)`` — the exact-verify side
-    shingles: DataFrame
-    #: ``(doc_id, signature array<bigint>)`` — one row per doc with at
-    #: least k tokens, the band-cut side
-    signatures: DataFrame
+    #: ``(doc_id, shingles array<string>, signature array<bigint>)`` —
+    #: one row per doc with at least k tokens; ``shingles`` is the
+    #: doc's set of DISTINCT shingles (the exact-verify side)
+    sets: DataFrame
+
+    @property
+    def signatures(self) -> DataFrame:
+        """``(doc_id, signature)`` — the band-cut side."""
+        return self.sets.select("doc_id", "signature")
 
 
 def shingle_signatures(
@@ -66,71 +77,17 @@ def shingle_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> ShingleSignatures:
-    """ONE tokenize+shingle kernel pass, materialized once
-    (localCheckpoint), sliced into the distinct-shingle rows and the
-    per-doc signature rows. Every consumer — the band cut, exact
+    """ONE tokenize+shingle+signature kernel pass, materialized once
+    (localCheckpoint): one row per document with at least ``k``
+    tokens, carrying its distinct-shingle set and its MinHash
+    signature (:func:`_minhash_slice`, value-identical to
+    :func:`minhash_signatures`). Every consumer — the band cut, exact
     verify, a stored signature catalog, a cross-catalog band join —
-    reads this checkpoint instead of re-running the kernel.
-
-    Its own kernel, not :func:`doc_feature_counts`, because it is the
-    one pass that feeds both the band cut and exact verify on the
-    ``clean`` path. Each document emits its distinct shingles
-    (insertion-ordered dict keys — duplicates only occur within a
-    document, so the rows are globally distinct with no distinct
-    shuffle) and ONE signature row (``shingle`` NULL, ``signature``
-    from :func:`_signature_fn`, value-identical to
-    :func:`minhash_signatures`)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
-
-    sig = _signature_fn(num_hashes, seed)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, shingles = [], []
-            sig_ids, sig_vals = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                ss = dict.fromkeys(kgrams(tokenize_text(text or ""), k))
-                if not ss:
-                    continue
-                ids.extend([doc_id] * len(ss))
-                shingles.extend(ss)
-                sig_ids.append(doc_id)
-                sig_vals.append(sig(ss))
-            # object dtypes throughout: an all-short-doc batch yields
-            # empty lists, and pandas' default float64 empty column is
-            # not Arrow-convertible to list<int64>
-            n_sh, n_sig = len(ids), len(sig_ids)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids + sig_ids, dtype="object"),
-                    "shingle": pd.Series(
-                        shingles + [None] * n_sig, dtype="object"
-                    ),
-                    "signature": pd.Series(
-                        [None] * n_sh + sig_vals, dtype="object"
-                    ),
-                }
-            )
-
-    id_type = dict(df.dtypes).get(id_col, "string")
-    raw = (
-        df.select(id_col, text_col)
-        .mapInPandas(
-            run, f"doc_id {id_type}, shingle string, signature array<bigint>"
-        )
-        .localCheckpoint()
-    )
+    reads this checkpoint instead of re-running the kernel."""
     return ShingleSignatures(
-        shingles=raw.filter(F.col("shingle").isNotNull()).select(
-            "doc_id", "shingle"
-        ),
-        signatures=raw.filter(F.col("shingle").isNull()).select(
-            "doc_id", "signature"
-        ),
+        _minhash_kernel(
+            df, k, num_hashes, seed, id_col, text_col, with_shingles=True
+        ).localCheckpoint()
     )
 
 
@@ -214,29 +171,90 @@ def _hash_params(num_hashes: int, seed: int) -> tuple[list[int], list[int]]:
     )
 
 
-def _signature_fn(
-    num_hashes: int, seed: int
-) -> Callable[[Collection[str]], list[int]]:
-    """``sig(shingles) -> list[int]``: the MinHash signature of one
-    document's DISTINCT shingle set — the one place the signature math
-    lives (both Arrow kernels call it). Base hash = md5-LE8 (the
-    engine's cross-engine hash, functions/hashing.py) reduced mod p,
-    then ``num_hashes`` affine permutations as one (shingles x hashes)
-    uint64 matrix, min along axis 0."""
+def _minhash_slice(texts, k: int, a, b):
+    """The one MinHash signature function, over one kernel slice (a
+    pyarrow string array): ``(rows, shingles, signature)`` for the rows
+    with at least one token ``k``-gram — their positions in ``texts``,
+    each one's DISTINCT shingles as a ListArray, and its signature as
+    a ListArray of ``len(a)`` int64 values.
+
+    Tokens and k-grams come from ``functions/tokenize.py``'s
+    ``token_table``/``kgram_table``. md5-LE8 (functions/hashing.py)
+    runs once per distinct shingle of the slice, reduced mod p; then
+    each affine permutation ``(a_i*x + b_i) mod p`` is one pass over the
+    1-D array of distinct (row, shingle) pairs and a
+    ``np.minimum.reduceat`` over each row's pairs. No (shingles x
+    hashes) matrix is ever built: its size is what raised the Python
+    workers' peak RSS."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    av, bv = _hash_params(num_hashes, seed)
-    a_arr = np.asarray(av, dtype=np.uint64)
-    b_arr = np.asarray(bv, dtype=np.uint64)
-    p_mod = np.uint64(_P)
+    from textalyzer_spark.functions.hashing import md5_le8_array
+    from textalyzer_spark.functions.tokenize import kgram_table, token_table
 
-    def sig(shingles: Collection[str]) -> list[int]:
-        base = np.asarray([md5_le8(s) % _P for s in shingles], dtype=np.uint64)
-        # (n_shingles, num_hashes): a*(x mod p)+b < 2^62, exact
-        perms = (base[:, None] * a_arr[None, :] + b_arr[None, :]) % p_mod
-        return perms.min(axis=0).astype(np.int64).tolist()
+    grams, rows = kgram_table(*token_table(texts), k)
+    if not len(grams):
+        return (
+            np.zeros(0, np.int64),
+            pa.array([], pa.list_(pa.string())),
+            pa.array([], pa.list_(pa.int64())),
+        )
+    enc = pc.dictionary_encode(grams)
+    n_dict = len(enc.dictionary)
+    # the distinct (row, shingle) pairs, grouped by row
+    pairs = np.unique(rows * n_dict + enc.indices.to_numpy())
+    rows, gram = np.divmod(pairs, n_dict)
+    rows, first = np.unique(rows, return_index=True)
+    p = np.uint64(_P)
+    x = (md5_le8_array(enc.dictionary) % p)[gram]
+    sig = np.empty((len(a), len(rows)), np.int64)
+    for i, (ai, bi) in enumerate(zip(a, b)):
+        # a*(x mod p)+b < 2^62: exact in uint64
+        sig[i] = np.minimum.reduceat((x * np.uint64(ai) + np.uint64(bi)) % p, first)
+    set_at = np.append(first, len(pairs)).astype(np.int32)
+    sig_at = np.arange(0, len(a) * (len(rows) + 1), len(a), dtype=np.int32)
+    return (
+        rows,
+        pa.ListArray.from_arrays(pa.array(set_at), enc.dictionary.take(pa.array(gram))),
+        pa.ListArray.from_arrays(pa.array(sig_at), pa.array(sig.T.ravel())),
+    )
 
-    return sig
+
+def _minhash_kernel(
+    df: DataFrame,
+    k: int,
+    num_hashes: int,
+    seed: int,
+    id_col: str,
+    text_col: str,
+    with_shingles: bool,
+) -> DataFrame:
+    """``(doc_id[, shingles], signature)`` — :func:`_minhash_slice` as
+    a ``mapInArrow`` over zero-copy ``SLICE_ROWS``-row slices of each
+    Arrow batch; the two signature kernels differ only in
+    ``with_shingles``."""
+    import pyarrow as pa
+
+    from textalyzer_spark.functions.tokenize import SLICE_ROWS
+
+    a, b = _hash_params(num_hashes, seed)
+    names = ["doc_id", "shingles", "signature"] if with_shingles else ["doc_id", "signature"]
+
+    def run(batches):
+        for batch in batches:
+            for i in range(0, batch.num_rows, SLICE_ROWS):
+                part = batch.slice(i, SLICE_ROWS)
+                rows, shingles, signature = _minhash_slice(part.column(1), k, a, b)
+                ids = part.column(0).take(pa.array(rows, pa.int64()))
+                cols = [ids, shingles, signature] if with_shingles else [ids, signature]
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    id_type = dict(df.dtypes).get(id_col, "string")
+    shingles = " shingles array<string>," if with_shingles else ""
+    return df.select(id_col, text_col).mapInArrow(
+        run, f"doc_id {id_type},{shingles} signature array<bigint>"
+    )
 
 
 def minhash_signatures(
@@ -250,12 +268,10 @@ def minhash_signatures(
     """``(doc_id, signature array<bigint>)`` — MinHash over k-shingles,
     one row per doc with at least ``k`` tokens.
 
-    Arrow-batched: one kernel pass tokenizes, shingles and applies
-    :func:`_signature_fn` per doc — the signature-only twin of the
-    :func:`shingle_signatures` kernel, for callers that need no
-    shingle table (catalog builds, streaming; the ``ingest`` path).
-    Kept separate: routing it through :func:`shingle_signatures` would
-    add the shingle rows and a checkpoint these callers never read.
+    The signature-only projection of the :func:`shingle_signatures`
+    kernel (the same :func:`_minhash_slice`), for callers that need no
+    shingle sets (catalog builds, streaming; the ``ingest`` path): no
+    set column leaves Python and no checkpoint is taken.
 
     A pure-Catalyst formulation (transform + array_min per
     permutation) was tried first: higher-order-function lambdas
@@ -263,37 +279,9 @@ def minhash_signatures(
     for 5.8M modular ops at sf0.1; this batch pass is ~50x faster.
     No shuffle either way; scales linearly with corpus size.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
-
-    sig = _signature_fn(num_hashes, seed)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tokenize_text(text or "")
-                if len(toks) < k:
-                    continue
-                doc_ids.append(doc_id)
-                sigs.append(sig(set(kgrams(toks, k))))
-            # explicit object dtype: a non-empty batch whose docs are
-            # ALL too short yields empty lists, and pandas' default
-            # float64 empty column is not Arrow-convertible to
-            # list<int64> (NumPyConverter) — hit by streaming
-            # maintenance on tiny batches
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "signature": pd.Series(sigs, dtype="object"),
-                }
-            )
-
-    id_type = dict(df.dtypes).get(id_col, "string")
-    return df.mapInPandas(run, f"doc_id {id_type}, signature array<bigint>")
+    return _minhash_kernel(
+        df, k, num_hashes, seed, id_col, text_col, with_shingles=False
+    )
 
 
 def _rows_per_band(num_hashes: int, bands: int) -> int:
@@ -365,6 +353,16 @@ def minhash_lsh_pairs(
     depends on the S-curve 1-(1-t^r)^b. With 64 hashes / 16 bands
     (r=4), t=0.5 → ~0.93 recall.
 
+    Verification is set-level (after HERO, SIGMOD 2024, and
+    MetricJoin, ICDE 2023): each candidate joins the one-row-per-doc
+    set table on ``doc_a``, then on ``doc_b``;
+    ``n_inter = size(array_intersect(sh_a, sh_b))`` and the doc sizes
+    are the set sizes, so no shingle-keyed join or aggregate is left.
+    A lossless size-ratio prune drops pairs with
+    ``min(n_a, n_b) < (t - 1e-4) * max(n_a, n_b)`` before the
+    intersect. ``doc_id`` must be unique (see
+    :class:`ShingleSignatures`).
+
     ``max_bucket_docs`` (default ON) skips band buckets holding more
     than that many documents — the LSH mega-bucket guard: a
     boilerplate family of f near-identical docs puts all f in the
@@ -376,14 +374,12 @@ def minhash_lsh_pairs(
     unguarded recall.
     """
     rows = _rows_per_band(num_hashes, bands)
-    # ONE kernel pass + ONE materialization carries both the
-    # distinct-shingle rows (for exact verify) and one in-kernel
-    # signature row per doc (for the band cut)
+    # ONE kernel pass + ONE materialization carries each doc's shingle
+    # set (for exact verify) and its signature (for the band cut)
     if shingle_sigs is None:
         shingle_sigs = shingle_signatures(
             df, k, num_hashes, seed, id_col, text_col
         )
-    sh = shingle_sigs.shingles
     # each bucket consumer (guard, both join sides) re-derives the band
     # explode from the signature checkpoint — a narrow derive, measured
     # equal to a bucket checkpoint (round-8 A/B) with one less
@@ -416,23 +412,36 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    # exact verification of candidates only, reusing the materialized
-    # shingle table from the top of the pipeline
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cands.join(sha, "doc_a")
-        .join(shb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
+    # set-level exact verify: each candidate meets both docs' shingle
+    # sets through two document-level joins
+    sets = shingle_sigs.sets
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    n_a, n_b = F.size("sh_a"), F.size("sh_b")
+    verified = (
+        cands.join(sa, "doc_a")
         .join(sb, "doc_b")
+        # MetricJoin's size-ratio prune, lossless: round(j, 4) >= t
+        # implies j >= t - 5e-5, and j <= min(n_a, n_b) / max(n_a, n_b)
+        .filter(
+            F.least(n_a, n_b) >= F.lit(threshold - 1e-4) * F.greatest(n_a, n_b)
+        )
         .select(
+            "doc_a",
+            "doc_b",
+            n_a.alias("n_a"),
+            n_b.alias("n_b"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
+        )
+    )
+    if threshold <= 0:
+        # a pair sharing no shingle (an md5-mod-p collision in every
+        # row of a band) is no pair; a positive threshold already
+        # drops it, and this filter would be one more intersect per
+        # pair (Catalyst inlines n_inter into every predicate)
+        verified = verified.filter(F.col("n_inter") > 0)
+    return (
+        verified.select(
             "doc_a",
             "doc_b",
             F.round(

@@ -9,10 +9,11 @@ block/content" generalizes to "connected by any near-dup pair edge".
 Scale design: candidate/pair graphs are orders of magnitude smaller
 than the corpus (only docs that matched anything appear), so the
 common case collects the edge list once and runs driver union-find —
-one job instead of ~2 jobs x log(diameter) Pregel rounds. Graphs over
+one job instead of ~2 jobs per Pregel round. Graphs over
 ``driver_max_edges`` fall back to distributed min-label propagation
-(a Pregel-lite loop; near-dup graphs are shallow, so it converges in
-a few rounds)."""
+(a Pregel-lite loop): a label moves one hop per round, so the rounds
+grow with the longest chain of hops in a component, and the loop
+raises after ``max_iters`` rounds."""
 
 from __future__ import annotations
 
@@ -48,14 +49,14 @@ def connected_components(
       this path works on the DIRECTED distinct edge table — half the
       shuffle, checkpoint and collect traffic of a symmetrized one
       (the caps now count directed rows/bytes).
-    * larger graphs: min-label propagation (driver loop of ~
-      log(diameter) join+agg rounds, lineage cut per round) — the
-      only path that needs the symmetrized edge table, built here
-      only when taken. If the propagation has NOT converged after
-      ``max_iters`` rounds the labels would be silently non-minimal
-      for long-chain components, so it RAISES instead (retry with a
-      higher ``max_iters``; near-dup graphs are shallow, the default
-      never trips on them)."""
+    * larger graphs: min-label propagation (driver loop of join+agg
+      rounds, lineage cut per round) — the only path that needs the
+      symmetrized edge table, built here only when taken. A label
+      moves ONE hop per round, so a component needs one round per hop
+      from its minimum to its farthest node, plus one to see no
+      change: a chain of ``max_iters`` or more hops does not converge.
+      The labels would then be silently non-minimal, so it RAISES
+      instead (retry with a higher ``max_iters``)."""
     edges = (
         edges.select(F.col("src"), F.col("dst"))
         .filter(F.col("src") != F.col("dst"))

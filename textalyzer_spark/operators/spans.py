@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from textalyzer_spark.functions.syllables import syllables_col
-from textalyzer_spark.functions.tokenize import tokens_udf
+from textalyzer_spark.functions.tokenize import SLICE_ROWS, tokens_udf
 
 
 def explode_spans(nested: DataFrame) -> DataFrame:
@@ -90,67 +90,6 @@ def process_spans(nested: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
     )
 
 
-# Rows per slice of an Arrow batch in process_spans_arrow: the columnar
-# path holds several per-byte temporaries of the slice's joined text,
-# and whole 8,192-row batches raised the Python workers' peak RSS by
-# ~13% (perfbench extract, 4 cores) for no speed-up
-_SLICE_ROWS = 1024
-
-
-def _utf8(strings):
-    """``(row offsets from 0, uint8 bytes)`` of a StringArray's buffers."""
-    import numpy as np
-
-    _, offs_buf, data_buf = strings.buffers()
-    offs = np.frombuffer(offs_buf, np.int32)[strings.offset : strings.offset + len(strings) + 1]
-    if offs[-1] == offs[0]:
-        return offs - offs[0], np.zeros(0, np.uint8)
-    return offs - offs[0], np.frombuffer(data_buf, np.uint8)[offs[0] : offs[-1]]
-
-
-def _ascii_token_metrics(row_at, buf):
-    """``(n_tokens, n_syllables)`` int64 arrays per row of ASCII text
-    (``row_at``: the rows' offsets into ``buf``, its UTF-8 bytes), from
-    array operations: a token is a maximal ``[A-Za-z]`` run inside one
-    row (tokenize_text's ASCII rule), lowered by ``| 0x20``;
-    :func:`count_syllables` runs once per distinct token."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from textalyzer_spark.functions.syllables import count_syllables
-
-    lower = buf | 0x20
-    alpha = np.zeros(len(buf) + 2, bool)
-    np.less(lower - ord("a"), 26, out=alpha[1:-1])  # uint8 wrap-around: [A-Za-z]
-    # letter runs start and end where alpha flips
-    flips = np.flatnonzero(alpha[1:] != alpha[:-1])
-    starts, ends = flips[0::2], flips[1::2]
-    # a run across a row boundary is two tokens (empty rows repeat a
-    # boundary)
-    cut = row_at[1:-1]
-    cut = np.unique(cut[alpha[cut] & alpha[cut + 1]])
-    if len(cut):
-        starts = np.insert(starts, np.searchsorted(starts, cut), cut)
-        ends = np.insert(ends, np.searchsorted(ends, cut), cut)
-    # the letters compacted are the tokens back to back
-    tok_at = np.zeros(len(starts) + 1, np.int32)
-    np.cumsum(ends - starts, out=tok_at[1:])
-    tokens = pa.StringArray.from_buffers(
-        len(starts), pa.py_buffer(tok_at), pa.py_buffer(lower.compress(alpha[1:-1]))
-    )
-    enc = pc.dictionary_encode(tokens)
-    syl_of = np.fromiter(
-        (count_syllables(w) for w in enc.dictionary.to_pylist()),
-        np.int64,
-        count=len(enc.dictionary),
-    )
-    syl_cum = np.zeros(len(starts) + 1, np.int64)
-    np.cumsum(syl_of[enc.indices.to_numpy()], out=syl_cum[1:])
-    row_tok = np.searchsorted(starts, row_at)
-    return np.diff(row_tok), np.diff(syl_cum[row_tok])
-
-
 def _span_metrics(spans):
     """``(n_text_spans, n_media_spans, n_tokens, n_syllables)`` arrays
     for one ListArray of span structs, with :func:`process_spans`'
@@ -162,7 +101,7 @@ def _span_metrics(spans):
     import pyarrow.compute as pc
 
     from textalyzer_spark.functions.syllables import count_syllables
-    from textalyzer_spark.functions.tokenize import tokenize_text
+    from textalyzer_spark.functions.tokenize import token_table
 
     n = len(spans)
     lengths = pc.list_value_length(spans).fill_null(0).to_numpy()
@@ -183,20 +122,17 @@ def _span_metrics(spans):
 
     text = pc.if_else(is_text, pc.fill_null(text, ""), "")
     joined = pc.binary_join(pa.ListArray.from_arrays(pa.array(span_at), text), "")
-    row_at, buf = _utf8(joined)
-    other = np.zeros(0, np.int64)
-    if len(buf) and buf.max() >= 0x80:
-        # a non-ASCII row takes tokenize_text's Unicode-exact path on its
-        # own; the rest of the slice stays columnar
-        ascii_rows = pc.string_is_ascii(joined)
-        other = np.flatnonzero(~ascii_rows.to_numpy(zero_copy_only=False))
-        row_at, buf = _utf8(pc.if_else(ascii_rows, joined, ""))
-    n_tok, n_syl = _ascii_token_metrics(row_at, buf)
-    for i, t in zip(other, pc.take(joined, pa.array(other)).to_pylist()):
-        toks = tokenize_text(t)
-        n_tok[i] = len(toks)
-        n_syl[i] = sum(count_syllables(w) for w in toks)
-    return (*n_spans, pa.array(n_tok), pa.array(n_syl))
+    tokens, row_tok = token_table(joined)
+    # count_syllables runs once per distinct token
+    enc = pc.dictionary_encode(tokens)
+    syl_of = np.fromiter(
+        (count_syllables(w) for w in enc.dictionary.to_pylist()),
+        np.int64,
+        count=len(enc.dictionary),
+    )
+    syl_cum = np.zeros(len(tokens) + 1, np.int64)
+    np.cumsum(syl_of[enc.indices.to_numpy()], out=syl_cum[1:])
+    return (*n_spans, pa.array(np.diff(row_tok)), pa.array(np.diff(syl_cum[row_tok])))
 
 
 def process_spans_arrow(nested: DataFrame) -> DataFrame:
@@ -209,11 +145,12 @@ def process_spans_arrow(nested: DataFrame) -> DataFrame:
     spans array) in ArrowEvalPython's HybridRowQueue while the python
     result is awaited, and mapInPandas would build a python dict per
     span struct in both directions. Each batch is cut into zero-copy slices of
-    ``_SLICE_ROWS`` rows, which bound the kernel's per-byte temporaries.
+    ``SLICE_ROWS`` rows, which bound the kernel's per-byte temporaries.
     Per slice, each document's text-kind children are joined with
     ``binary_join`` (media and NULL text join as ``""``, so a word split
-    across two text spans counts once). Rows whose joined text is ASCII
-    are tokenized with numpy over the joined UTF-8 buffer, and
+    across two text spans counts once), and the joined texts go through
+    :func:`~textalyzer_spark.functions.tokenize.token_table`. Rows whose
+    joined text is ASCII are tokenized with numpy over their UTF-8 buffer, and
     :func:`count_syllables` runs once per distinct token; per-document
     totals are differences of cumulative sums. A non-ASCII row falls
     back, alone, to :func:`tokenize_text`, whose ``jvm_lower`` casing is
@@ -235,8 +172,8 @@ def process_spans_arrow(nested: DataFrame) -> DataFrame:
     def run(batches):
         for b in batches:
             parts = [
-                _span_metrics(b.slice(i, _SLICE_ROWS).column("spans"))
-                for i in range(0, b.num_rows, _SLICE_ROWS)
+                _span_metrics(b.slice(i, SLICE_ROWS).column("spans"))
+                for i in range(0, b.num_rows, SLICE_ROWS)
             ]
             metrics = [
                 pa.concat_arrays([p[k] for p in parts]) if parts else pa.array([], pa.int64())
