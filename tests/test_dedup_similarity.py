@@ -469,6 +469,99 @@ def test_embedding_lsh_mega_bucket_guard(spark):
     assert not any(a < 50 and b < 50 for a, b in gset)  # family dropped
 
 
+def test_minhash_bucket_cap_contract_batch_path(spark):
+    """``max_bucket_docs`` on ``minhash_lsh_pairs``: a bucket of exactly
+    ``cap`` docs keeps its pairs, one of ``cap + 1`` forms none, and
+    ``None`` keeps every pair. Identical docs share a bucket in every
+    band, so each family is one bucket per band."""
+    fam_a = "shared boilerplate footer text about cookies and privacy terms"
+    fam_b = "another repeated banner about newsletter signup and offers"
+    df = spark.createDataFrame(
+        [(i, fam_a) for i in (1, 2, 3)]
+        + [(i, fam_b) for i in (11, 12, 13, 14)]
+        + [(21, "a lone document about tide pools and kelp forests")],
+        "doc_id bigint, text string",
+    )
+    kw = dict(k=3, num_hashes=16, bands=4, threshold=0.5)
+
+    def pairs(cap):
+        return {
+            (r.doc_a, r.doc_b)
+            for r in minhash_lsh_pairs(df, max_bucket_docs=cap, **kw).collect()
+        }
+
+    a_pairs = {(1, 2), (1, 3), (2, 3)}
+    b_pairs = {(a, b) for a in (11, 12, 13, 14) for b in (11, 12, 13, 14) if a < b}
+    assert pairs(3) == a_pairs  # 3 docs at cap 3 kept, 4 docs dropped
+    assert pairs(4) == a_pairs | b_pairs
+    assert pairs(None) == a_pairs | b_pairs
+
+
+def test_minhash_bucket_cap_contract_cross_path(spark):
+    """``max_bucket_docs`` on the catalog x batch path counts catalog
+    and batch rows of a bucket together: two identical docs in the
+    catalog and two in the batch form no pair at ``cap=3``, though
+    each side alone is under the cap; at ``cap=4`` (exactly the
+    bucket's size) and at ``None`` all four cross pairs are kept. A
+    small bucket beside it is untouched by the cap."""
+    from textalyzer_spark.operators import incremental as inc
+
+    fam = "shared boilerplate footer text about cookies and privacy terms"
+    pair = "a lone document about tide pools and kelp forests at dawn"
+    old = spark.createDataFrame(
+        [(1, fam), (2, fam), (3, pair)], "doc_id bigint, text string"
+    )
+    new = spark.createDataFrame(
+        [(11, fam), (12, fam), (13, pair)], "doc_id bigint, text string"
+    )
+    kw = dict(k=3, num_hashes=16, seed=42)
+    cat = inc.minhash_catalog(old, **kw)
+
+    def pairs(cap):
+        out = inc.incremental_minhash_pairs(
+            new, cat, bands=4, threshold=0.5, max_bucket_docs=cap, **kw
+        ).collect()
+        return {(r.doc_old, r.doc_new) for r in out}
+
+    fam_pairs = {(1, 11), (1, 12), (2, 11), (2, 12)}
+    assert pairs(3) == {(3, 13)}
+    assert pairs(4) == fam_pairs | {(3, 13)}
+    assert pairs(None) == fam_pairs | {(3, 13)}
+
+
+def test_minhash_bucket_cap_lives_only_in_lsh_candidates():
+    """The MinHash bucket cap (``<= max_bucket_docs``) has one home,
+    ``dedup.lsh_candidates``, shared by the batch, incremental and
+    streaming paths. The embedding guards are exempt: their blocked
+    verify is of another shape. Static scan; no Spark session."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "textalyzer_spark"
+    homes = {
+        ("operators/dedup.py", "lsh_candidates"),
+        ("operators/similarity.py", "embedding_near_dup_pairs_lsh"),
+        ("operators/incremental.py", "incremental_embedding_components"),
+    }
+    cap = re.compile(r"<=\s*max_bucket_docs\b|between\([^)]*max_bucket_docs")
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text(encoding="utf-8")
+        funcs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for m in cap.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            owners = {name for lo, hi, name in funcs if lo <= line <= hi}
+            if not any((rel, o) in homes for o in owners):
+                hits.append(f"{rel}:{line}: {m.group(0)} in {sorted(owners)}")
+    assert not hits, "bucket cap outside lsh_candidates:\n" + "\n".join(hits)
+
+
 def test_operators_tolerate_empty_and_tiny_corpora(spark):
     """Every family returns an empty/valid result on a 0-row input,
     and IVF trains fewer cells than n_clusters on a tiny corpus

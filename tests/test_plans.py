@@ -106,13 +106,70 @@ def test_minhash_verify_is_set_level(docs):
     plan = _executed_plan(
         minhash_lsh_pairs(docs.limit(50), k=3, num_hashes=16, bands=4, threshold=0.3)
     )
-    assert "array_intersect" in plan
+    # n_inter is a generated column: one intersect per candidate, not
+    # one per predicate and projection that reads it
+    assert plan.count("array_intersect(") == 1
     for keyed in (
         r"Aggregate\(keys=\[[^\]]*shingle",
         r"hashpartitioning\([^)]*shingle",
         r"Join \[[^\]]*shingle",
     ):
         assert not re.search(keyed, plan), keyed
+
+
+def _band_bucket_exchanges(df) -> int:
+    """Exchanges keyed on ``(band, bucket)`` in the final plan of an
+    executed query; a ReusedExchange reads the same shuffle and is not
+    counted."""
+    import re
+
+    df.collect()
+    final = _executed_plan(df).split("== Initial Plan ==")[0]
+    return sum(
+        1
+        for line in final.splitlines()
+        if re.search(r"Exchange hashpartitioning\(band#\d+, bucket#\d+", line)
+        and "ReusedExchange" not in line
+    )
+
+
+def test_lsh_candidates_one_band_bucket_exchange(spark, docs):
+    """The MinHash candidate stage moves each band row once: one
+    ``(band, bucket)`` exchange feeds the occupancy count, the
+    bucket-cap and one-sided filters and the pair join, on the batch
+    path and on the catalog x batch path. Broadcast joins are off, as
+    for a corpus too large to broadcast, where a count joined back to
+    each side would shuffle the band rows again for every join."""
+    from textalyzer_spark.operators.dedup import minhash_lsh_pairs
+    from textalyzer_spark.operators.incremental import (
+        _cross_pairs_from_sigs,
+        minhash_catalog,
+    )
+
+    kw = dict(k=3, num_hashes=16)
+    cat = minhash_catalog(docs.filter(F.col("doc_id") % 2 == 0), **kw)
+    new = minhash_catalog(docs.filter(F.col("doc_id") % 3 == 0), **kw)
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        for q in (
+            minhash_lsh_pairs(docs, bands=4, threshold=0.3, **kw),
+            _cross_pairs_from_sigs(
+                new.localCheckpoint(), cat.localCheckpoint(), 16, 4, 0.3, 1000
+            ),
+        ):
+            assert _band_bucket_exchanges(q) == 1
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_signatures_run_in_arrow_batches_not_interpreted_hofs(spark, docs):

@@ -6,7 +6,7 @@ The shingle→hash→band→bucket-join pattern follows the public
 MinHash/LSH literature (Broder 1997; Leskovec et al., MMDS ch.3).
 
 Scale notes: every stage is a hash shuffle on a derived key (shingle,
-band hash, simhash chunk). Partial aggregation and AQE skew splitting
+band bucket, simhash chunk). Partial aggregation and AQE skew splitting
 apply automatically; signature computation is per-row (no shuffle) —
 MinHash and SimHash both in Arrow-batched numpy (the Catalyst
 higher-order-function versions ran interpreted and ~20-50x slower).
@@ -24,6 +24,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from textalyzer_spark.functions.hashing import md5_le8
 from textalyzer_spark.operators.shingles import (
@@ -301,10 +302,11 @@ def _rows_per_band(num_hashes: int, bands: int) -> int:
 def band_buckets_col(bands: int, rows: int) -> Column:
     """``posexplode`` of the ``signature`` column into ``(band,
     bucket)``: the signature cut into ``bands`` bands of ``rows``
-    values, each band's values joined as a string bucket key (NOT
-    re-hashed — see the key-width note in :func:`minhash_lsh_pairs`).
-    The one definition of the bucket key: the batch, incremental and
-    streaming LSH joins must cut identical buckets."""
+    values, each band's values joined as a string bucket key — NOT
+    re-hashed: xxhash64 has no cross-engine twin and the key is only
+    rows x ~10 digits wide. The one definition of the bucket key: the
+    batch, incremental and streaming LSH joins must cut identical
+    buckets."""
     return F.posexplode(
         F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -319,11 +321,65 @@ def band_buckets_col(bands: int, rows: int) -> Column:
     ).alias("band", "bucket")
 
 
-def _band_buckets(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
-    """``(doc_id, band, bucket)`` from a ``(doc_id, signature)`` table.
-    Shared by the single-corpus LSH join and the incremental catalog
-    join."""
-    return sigs.select("doc_id", band_buckets_col(bands, rows))
+def lsh_candidates(
+    sigs: DataFrame,
+    bands: int,
+    rows: int,
+    max_bucket_docs: int | None,
+    catalog: DataFrame | None = None,
+) -> DataFrame:
+    """Banded-LSH candidate pairs ``(doc_a, doc_b)`` of ``(doc_id,
+    signature)`` tables: docs sharing a bucket in any band. Without
+    ``catalog`` the pairs lie within ``sigs`` (``doc_a < doc_b``);
+    with it they are catalog x ``sigs`` (``doc_a`` the catalog doc).
+    The one candidate stage of every MinHash path.
+
+    One exchange on ``(band, bucket)`` carries every band row; a
+    window count over it gives each bucket its occupancy ``n``, its
+    catalog and batch rows together. Only buckets with
+    ``2 <= n <= max_bucket_docs`` (crossed: with rows from both
+    sides) reach the pair join, inside the same partitioning, so the
+    singleton buckets (nearly all) and one-sided ones form no pair.
+    A window buffer spills, so a 10^7-doc bucket is counted and
+    dropped without becoming one in-memory array (``collect_list``).
+
+    ``max_bucket_docs`` is the mega-bucket guard: a family of f
+    near-identical docs shares a bucket in EVERY band, fanning out
+    f^2/2 pairs per band (measured: a 50k-doc boilerplate-heavy
+    synthetic emitted 470k true pairs through ~10^9 candidate rows).
+    A pair is lost only if every bucket it shares is over the cap;
+    ``None`` keeps every bucket.
+    """
+    def cut(side: DataFrame, new: bool) -> DataFrame:
+        return side.select(
+            "doc_id", band_buckets_col(bands, rows), F.lit(new).alias("new")
+        )
+
+    bucket = Window.partitionBy("band", "bucket")
+    band_rows = cut(sigs, True)
+    occupancy = [F.count(F.lit(1)).over(bucket).alias("n")]
+    keep = F.col("n") >= 2
+    if max_bucket_docs is not None:
+        keep &= F.col("n") <= max_bucket_docs
+    if catalog is not None:
+        band_rows = cut(catalog, False).unionByName(band_rows)
+        occupancy.append(F.count_if("new").over(bucket).alias("n_new"))
+        keep &= (F.col("n_new") >= 1) & (F.col("n_new") < F.col("n"))
+    occ = band_rows.select("*", *occupancy).filter(keep)
+    # no join hint: a merge join reuses the window's partitioning, or
+    # AQE broadcasts a small side (faster on 1.5k-doc batches)
+    a, b = occ.alias("a"), occ.alias("b")
+    pair = (
+        ~F.col("a.new") & F.col("b.new")
+        if catalog is not None
+        else F.col("a.doc_id") < F.col("b.doc_id")
+    )
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(pair)
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -347,8 +403,8 @@ def minhash_lsh_pairs(
 
     Candidate generation: signatures are cut into ``bands`` bands of
     ``num_hashes/bands`` rows (``bands`` must divide ``num_hashes``);
-    docs colliding in any band's bucket become candidates (bucket
-    join — no all-pairs self-join). Candidates are then verified with
+    docs colliding in any band's bucket become candidates
+    (:func:`lsh_candidates`). Candidates are then verified with
     exact shingle Jaccard, so precision is exact and only recall
     depends on the S-curve 1-(1-t^r)^b. With 64 hashes / 16 bands
     (r=4), t=0.5 → ~0.93 recall.
@@ -356,22 +412,17 @@ def minhash_lsh_pairs(
     Verification is set-level (after HERO, SIGMOD 2024, and
     MetricJoin, ICDE 2023): each candidate joins the one-row-per-doc
     set table on ``doc_a``, then on ``doc_b``;
-    ``n_inter = size(array_intersect(sh_a, sh_b))`` and the doc sizes
-    are the set sizes, so no shingle-keyed join or aggregate is left.
-    A lossless size-ratio prune drops pairs with
+    ``n_inter = size(array_intersect(sh_a, sh_b))``, computed once
+    per candidate, and the doc sizes are the set sizes, so no
+    shingle-keyed join or aggregate is left. A lossless size-ratio
+    prune drops pairs with
     ``min(n_a, n_b) < (t - 1e-4) * max(n_a, n_b)`` before the
     intersect. ``doc_id`` must be unique (see
     :class:`ShingleSignatures`).
 
-    ``max_bucket_docs`` (default ON) skips band buckets holding more
-    than that many documents — the LSH mega-bucket guard: a
-    boilerplate family of f near-identical docs puts all f in the
-    same bucket of EVERY band, fanning the join out to f^2/2 rows per
-    band (measured: a 50k-doc boilerplate-heavy synthetic emitted
-    470k true pairs through ~10^9 candidate rows). A pair is lost
-    only if every band bucket it shares is over the cap, i.e. only
-    inside such quadratic-by-construction families; ``None`` restores
-    unguarded recall.
+    ``max_bucket_docs`` (default ON): band buckets of more docs form
+    no pair — the mega-bucket guard of :func:`lsh_candidates`;
+    ``None`` restores unguarded recall.
     """
     rows = _rows_per_band(num_hashes, bands)
     # ONE kernel pass + ONE materialization carries each doc's shingle
@@ -380,75 +431,31 @@ def minhash_lsh_pairs(
         shingle_sigs = shingle_signatures(
             df, k, num_hashes, seed, id_col, text_col
         )
-    # each bucket consumer (guard, both join sides) re-derives the band
-    # explode from the signature checkpoint — a narrow derive, measured
-    # equal to a bucket checkpoint (round-8 A/B) with one less
-    # materialization held in memory.
-    # bucket key = the band's signature values joined as a string —
-    # NOT re-hashed (xxhash64 has no cross-engine twin, and the key
-    # is bounded at rows x ~10 digits, so the shuffle-width win of
-    # an 8-byte rehash is marginal; equality semantics are
-    # identical minus a ~2^-64 collision false-positive the
-    # exact-verify stage would kill anyway)
-    buckets = _band_buckets(shingle_sigs.signatures, bands, rows)
-    if max_bucket_docs is not None:
-        ok = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_bucket_docs)
-            .select("band", "bucket")
-        )
-        buckets = buckets.join(ok, ["band", "bucket"])
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cands = lsh_candidates(shingle_sigs.signatures, bands, rows, max_bucket_docs)
     # set-level exact verify: each candidate meets both docs' shingle
     # sets through two document-level joins
     sets = shingle_sigs.sets
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    n_a, n_b = F.size("sh_a"), F.size("sh_b")
-    verified = (
+    n_a, n_b, n_inter = F.size("sh_a"), F.size("sh_b"), F.col("n_inter")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
         cands.join(sa, "doc_a")
         .join(sb, "doc_b")
         # MetricJoin's size-ratio prune, lossless: round(j, 4) >= t
         # implies j >= t - 5e-5, and j <= min(n_a, n_b) / max(n_a, n_b)
-        .filter(
-            F.least(n_a, n_b) >= F.lit(threshold - 1e-4) * F.greatest(n_a, n_b)
-        )
+        .filter(F.least(n_a, n_b) >= F.lit(threshold - 1e-4) * F.greatest(n_a, n_b))
+        # exploding a one-element array makes n_inter a generated
+        # column: Catalyst would inline a plain alias into each
+        # predicate and projection that reads it, one intersect each
+        .select("*", F.explode(F.array(inter)).alias("n_inter"))
+        # a pair sharing no shingle (an md5-mod-p collision in every
+        # row of a band) is no pair, even at threshold 0
+        .filter(n_inter > 0)
         .select(
             "doc_a",
             "doc_b",
-            n_a.alias("n_a"),
-            n_b.alias("n_b"),
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
-        )
-    )
-    if threshold <= 0:
-        # a pair sharing no shingle (an md5-mod-p collision in every
-        # row of a band) is no pair; a positive threshold already
-        # drops it, and this filter would be one more intersect per
-        # pair (Catalyst inlines n_inter into every predicate)
-        verified = verified.filter(F.col("n_inter") > 0)
-    return (
-        verified.select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                4,
-            ).alias("jaccard"),
+            F.round(n_inter / (n_a + n_b - n_inter).cast("double"), 4).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

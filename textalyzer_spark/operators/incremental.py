@@ -16,9 +16,13 @@ operator over the union corpus.
 Scale notes: the exact path is one hash shuffle of the NEW batch plus
 an anti-join against the catalog keyed on fingerprint (bucketed/
 broadcast by the optimizer — the catalog never rewrites). The minhash
-path joins band buckets, so catalog traffic is proportional to bucket
-collisions, not catalog size; signatures are num_hashes ints per doc
-— the only state a 10^12-doc catalog needs (no shingle storage), with
+path moves every catalog and batch band row through ONE ``(band,
+bucket)`` exchange that counts each bucket's rows; singleton,
+one-sided and over-cap buckets are dropped there, so only buckets
+with a catalog row AND a batch row reach the pair join, whose traffic
+is proportional to bucket collisions, not catalog size. Signatures
+are num_hashes ints per doc — the only state a 10^12-doc catalog
+needs (no shingle storage), with
 similarity estimated from signature agreement (the classic MinHash
 estimator E[agree/num_hashes] = J).
 """
@@ -29,8 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from textalyzer_spark.operators.dedup import (
-    _band_buckets,
     _rows_per_band,
+    lsh_candidates,
     shingle_signatures,
 )
 
@@ -130,8 +134,9 @@ def incremental_minhash_pairs(
     batch signatures (the same band cut as ``minhash_lsh_pairs``);
     similarity is the MinHash estimator agree/num_hashes — unrounded
     (exact in binary for power-of-two num_hashes), catalog-storable,
-    and value-exact in the DuckDB twin. ``max_bucket_docs`` guards on
-    the COMBINED (catalog + batch) bucket occupancy.
+    and value-exact in the DuckDB twin. ``max_bucket_docs`` caps a
+    bucket's COMBINED occupancy ``n`` (catalog + batch rows); a bucket
+    of one side only forms no pair at any cap.
 
     A new doc with any returned match is a near-duplicate of already-
     ingested data; survivors = new docs with no row here (anti-join),
@@ -156,38 +161,21 @@ def _cross_pairs_from_sigs(
     """The band-join + signature-agreement core of
     :func:`incremental_minhash_pairs`, over ALREADY MATERIALIZED new
     signatures — shared with the component-maintenance path so one
-    signature build feeds both intra and cross edges."""
-    rows = _rows_per_band(num_hashes, bands)
+    signature build feeds both intra and cross edges.
+
+    Candidates come from :func:`~textalyzer_spark.operators.dedup.
+    lsh_candidates`: one ``(band, bucket)`` exchange over catalog and
+    batch band rows together, whose occupancy ``n`` counts both
+    sides. Singleton buckets, buckets of one side only and buckets
+    over ``max_bucket_docs`` are dropped before any pair is formed."""
     # component catalogs carry NULL signatures for shingle-less docs
     # (they can never match) — keep them out of the band join, where
     # a NULL signature would band to the "" bucket and fan out
     cat_sigs = catalog.filter(F.col("signature").isNotNull())
-    ob = _band_buckets(cat_sigs, bands, rows)
-    nb = _band_buckets(new_sigs, bands, rows)
-    if max_bucket_docs is not None:
-        ok = (
-            ob.select("band", "bucket")
-            .unionAll(nb.select("band", "bucket"))
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_bucket_docs)
-            .select("band", "bucket")
-        )
-        ob = ob.join(ok, ["band", "bucket"])
-        nb = nb.join(ok, ["band", "bucket"])
-    cands = (
-        ob.alias("o")
-        .join(
-            nb.alias("n"),
-            (F.col("o.band") == F.col("n.band"))
-            & (F.col("o.bucket") == F.col("n.bucket")),
-        )
-        .select(
-            F.col("o.doc_id").alias("doc_old"),
-            F.col("n.doc_id").alias("doc_new"),
-        )
-        .distinct()
-    )
+    cands = lsh_candidates(
+        new_sigs, bands, _rows_per_band(num_hashes, bands),
+        max_bucket_docs, catalog=cat_sigs,
+    ).toDF("doc_old", "doc_new")
     so = cat_sigs.select(
         F.col("doc_id").alias("doc_old"), F.col("signature").alias("sig_o")
     )
