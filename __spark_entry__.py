@@ -1290,20 +1290,14 @@ def q_incremental_near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame
     union corpus with the same hybrid edge semantics (exact intra
     pairs per snapshot, signature-agreement cross pairs, recursive
     min-label walk) in oracles.incremental_near_dup_groups_sql."""
-    from textalyzer_spark.operators.incremental import (
-        incremental_near_dup_components,
-        minhash_component_catalog,
-    )
+    from textalyzer_spark.operators.incremental import minhash_components
 
     old, new = _split_batches(spark, sf_dir)
+    kw = dict(k=5, num_hashes=32, bands=8, threshold=0.1, seed=42)
     # in production the catalog is READ from a snapshot; computed
     # in-query it feeds band join + verify + label edges — barrier it
-    cat = minhash_component_catalog(
-        old, k=5, num_hashes=32, bands=8, threshold=0.1, seed=42
-    ).localCheckpoint()
-    labels = incremental_near_dup_components(
-        new, cat, k=5, num_hashes=32, bands=8, threshold=0.1, seed=42
-    )
+    cat = minhash_components(old, **kw).catalog.localCheckpoint()
+    labels = minhash_components(new, cat, **kw).labels
     return labels.select(
         "doc_id",
         "component",
@@ -1319,20 +1313,14 @@ def q_incremental_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFram
     pairs + cross bucket-collision pairs (id-only join, rounded-
     cosine verify) into one union labeling. Same LSH params as
     q_embedding_near_dup_lsh."""
-    from textalyzer_spark.operators.incremental import (
-        embedding_component_catalog,
-        incremental_embedding_components,
-    )
+    from textalyzer_spark.operators.incremental import embedding_components
 
     emb = _embeddings(spark, sf_dir)
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = emb.filter(F.col("vec_id") % 2 == 1)
-    cat = embedding_component_catalog(
-        old, threshold=0.35, dim=64, n_bits=4, n_tables=16
-    ).localCheckpoint()
-    labels = incremental_embedding_components(
-        new, cat, threshold=0.35, dim=64, n_bits=4, n_tables=16
-    )
+    kw = dict(threshold=0.35, dim=64, n_bits=4, n_tables=16)
+    cat = embedding_components(old, **kw).catalog.localCheckpoint()
+    labels = embedding_components(new, cat, **kw).labels
     return labels.select(
         "doc_id",
         "component",
@@ -1348,23 +1336,17 @@ def q_incremental_keep_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch scores on arrival, and the merged components keep their
     highest-quality member (tie -> min doc_id) via the same two-agg
     rule as q_near_dup_keep_quality."""
-    from textalyzer_spark.operators.incremental import (
-        incremental_near_dup_components,
-        minhash_component_catalog,
-    )
+    from textalyzer_spark.operators.incremental import minhash_components
     from textalyzer_spark.operators.near_dedup import quality_keep
     from textalyzer_spark.operators.quality import quality_score
 
     old, new = _split_batches(spark, sf_dir)
-    cat = minhash_component_catalog(
-        old, k=5, num_hashes=32, bands=8, threshold=0.1, seed=42
-    )
+    kw = dict(k=5, num_hashes=32, bands=8, threshold=0.1, seed=42)
+    cat = minhash_components(old, **kw).catalog
     catq = cat.join(
         quality_score(old).select("doc_id", "quality_score"), "doc_id"
     ).localCheckpoint()
-    labels = incremental_near_dup_components(
-        new, catq, k=5, num_hashes=32, bands=8, threshold=0.1, seed=42
-    )
+    labels = minhash_components(new, catq, **kw).labels
     q_all = catq.select("doc_id", "quality_score").unionByName(
         quality_score(new).select("doc_id", "quality_score")
     )
@@ -1379,14 +1361,11 @@ def q_incremental_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_simhash_pairs). Oracle: brute-pair union labeling
     (oracles.incremental_simhash_groups_sql) — the banding is
     recall-complete so edge sets match by construction."""
-    from textalyzer_spark.operators.incremental import (
-        incremental_simhash_components,
-        simhash_component_catalog,
-    )
+    from textalyzer_spark.operators.incremental import simhash_components
 
     old, new = _split_batches(spark, sf_dir)
-    cat = simhash_component_catalog(old, max_hamming=6).localCheckpoint()
-    labels = incremental_simhash_components(new, cat, max_hamming=6)
+    cat = simhash_components(old, max_hamming=6).catalog.localCheckpoint()
+    labels = simhash_components(new, cat, max_hamming=6).labels
     return labels.select(
         "doc_id",
         "component",

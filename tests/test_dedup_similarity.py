@@ -111,7 +111,7 @@ def test_lsh_bands_must_divide_num_hashes(spark, bands):
 def test_minhash_signature_kernels_agree(spark):
     """A catalog mixes signatures from the signature-only kernel
     (minhash_catalog) with those of the shingle+signature kernel
-    (shingle_signatures, minhash_component_catalog): both must give
+    (shingle_signatures, minhash_components): both must give
     the identical signature for every doc with >= k tokens, and no
     row for shorter docs. Short docs, repeated shingles and non-ASCII
     tokens included."""
@@ -119,7 +119,7 @@ def test_minhash_signature_kernels_agree(spark):
     from textalyzer_spark.operators.dedup import shingle_signatures
     from textalyzer_spark.operators.incremental import (
         minhash_catalog,
-        minhash_component_catalog,
+        minhash_components,
     )
 
     texts = [
@@ -153,7 +153,7 @@ def test_minhash_signature_kernels_agree(spark):
     built = sig_map(sets_df)
     sets = sets_df.collect()
     comp = sig_map(
-        minhash_component_catalog(df, k=k, num_hashes=nh, bands=4)
+        minhash_components(df, k=k, num_hashes=nh, bands=4).catalog
     )
     assert set(only) == want_ids
     assert only == built == comp
@@ -542,7 +542,7 @@ def test_minhash_bucket_cap_lives_only_in_lsh_candidates():
     homes = {
         ("operators/dedup.py", "lsh_candidates"),
         ("operators/similarity.py", "embedding_near_dup_pairs_lsh"),
-        ("operators/incremental.py", "incremental_embedding_components"),
+        ("operators/incremental.py", "embedding_components"),
     }
     cap = re.compile(r"<=\s*max_bucket_docs\b|between\([^)]*max_bucket_docs")
     hits = []
@@ -716,14 +716,13 @@ def test_incremental_embedding_component_maintenance(spark):
         "vec_id bigint, embedding array<double>",
     )
     kw = dict(threshold=0.95, dim=8, n_bits=2, n_tables=8, seed=7)
-    cat = inc.embedding_component_catalog(snap1, **kw)
+    cat = inc.embedding_components(snap1, **kw).catalog
     assert {r["vec_id"]: r["component"] for r in cat.collect()} == {
         0: 0, 2: 0, 30: 30,
     }
-    labels = inc.incremental_embedding_components(batch, cat, **kw)
+    labels, nxt = inc.embedding_components(batch, cat, **kw)
     lab = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert lab == {0: 0, 2: 0, 101: 0, 30: 30, 131: 131}
-    nxt = inc.updated_embedding_component_catalog(cat, batch, labels)
     rows = {r["vec_id"]: r["component"] for r in nxt.collect()}
     assert rows == lab
     assert nxt.filter("embedding IS NULL").count() == 0

@@ -194,7 +194,7 @@ def test_incremental_near_dup_component_maintenance(spark):
     # bands=32 -> 2 rows/band: a J=0.5 pair collides w.p. ~1-0.75^32
     # (the 4-row default would miss it ~36% of the time)
     kw = dict(k=3, num_hashes=64, bands=32, threshold=0.35, seed=42)
-    cat = inc.minhash_component_catalog(snap1, **kw)
+    cat = inc.minhash_components(snap1, **kw).catalog
     crows = {r["doc_id"]: r["component"] for r in cat.collect()}
     assert crows == {1: 1, 2: 1, 30: 30}
     # the cross edge set is exactly C~B (estimator over stored sigs);
@@ -203,14 +203,11 @@ def test_incremental_near_dup_component_maintenance(spark):
         batch, cat.select("doc_id", "signature"), **kw
     ).collect()
     assert {(r["doc_old"], r["doc_new"]) for r in cross} == {(2, 101)}
-    labels = inc.incremental_near_dup_components(batch, cat, **kw)
+    labels, nxt = inc.minhash_components(batch, cat, **kw)
     lab = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert lab == {1: 1, 2: 1, 101: 1, 30: 30, 130: 130}
     # catalog advance: old + new signatures, re-labeled to the merged
     # component mins
-    nxt = inc.updated_minhash_component_catalog(
-        cat, batch, labels, k=3, num_hashes=64, seed=42
-    )
     nrows = {r["doc_id"]: r["component"] for r in nxt.collect()}
     assert nrows == lab
     assert nxt.filter("signature IS NULL").count() == 0
@@ -277,14 +274,13 @@ def test_incremental_simhash_component_maintenance(spark):
     assert ham(1, 2) <= H and ham(2, 101) <= H < ham(1, 101), (
         ham(1, 2), ham(2, 101), ham(1, 101)
     )
-    cat = inc.simhash_component_catalog(snap1, max_hamming=H)
+    cat = inc.simhash_components(snap1, max_hamming=H).catalog
     assert {r["doc_id"]: r["component"] for r in cat.collect()} == {
         1: 1, 2: 1, 30: 30,
     }
-    labels = inc.incremental_simhash_components(batch, cat, max_hamming=H)
+    labels, nxt = inc.simhash_components(batch, cat, max_hamming=H)
     lab = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert lab == {1: 1, 2: 1, 101: 1, 30: 30, 130: 130}
-    nxt = inc.updated_simhash_component_catalog(cat, batch, labels)
     assert {r["doc_id"]: r["component"] for r in nxt.collect()} == lab
 
 
@@ -307,18 +303,118 @@ def test_incremental_quality_keep_prefers_cataloged_doc(spark):
         "doc_id bigint, text string",
     )
     kw = dict(k=3, num_hashes=64, bands=32, threshold=0.35, seed=42)
-    cat = inc.minhash_component_catalog(snap1, **kw)
+    cat = inc.minhash_components(snap1, **kw).catalog
     # stored quality: the cataloged doc 2 is the best of the chain
     quality = spark.createDataFrame(
         [(1, 0.4), (2, 0.9), (30, 0.5), (101, 0.6), (130, 0.2)],
         "doc_id bigint, quality_score double",
     )
-    labels = inc.incremental_near_dup_components(batch, cat, **kw)
+    labels = inc.minhash_components(batch, cat, **kw).labels
     out = {r["doc_id"]: (r["component"], r["keep"])
            for r in quality_keep(labels, quality).collect()}
     assert out[2] == (1, True)       # cataloged best survives
     assert out[1] == (1, False) and out[101] == (1, False)
     assert out[30] == (30, True) and out[130] == (130, True)
+
+
+def _split_snapshots(spark, table, id_col):
+    """The sf0.001 corpus table, its even-id snapshot and its odd-id
+    batch."""
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import DEFAULT_SF_DIR
+
+    df = spark.read.parquet(f"{DEFAULT_SF_DIR}/{table}.parquet")
+    return (
+        df,
+        df.filter(F.col(id_col) % 2 == 0),
+        df.filter(F.col(id_col) % 2 == 1),
+    )
+
+
+def _assert_maintained_equals_union(build, whole, old, new):
+    """``build(new, build(old).catalog)`` labels the union corpus
+    exactly like ``build(old ∪ new)``, on a fixture whose clusters
+    cross the snapshot boundary."""
+    union = {r["doc_id"]: r["component"] for r in build(whole).labels.collect()}
+    step = build(new, build(old).catalog)
+    assert {r["doc_id"]: r["component"] for r in step.labels.collect()} == union
+    members: dict = {}
+    for d, c in union.items():
+        members.setdefault(c, set()).add(d % 2)
+    assert sum(1 for parity in members.values() if parity == {0, 1}) >= 5
+
+
+def test_simhash_maintenance_equals_union_build(spark):
+    """SimHash banding and its cross join are recall-complete and the
+    Hamming verify is exact, so snapshot-by-snapshot maintenance is
+    the union build."""
+    docs, old, new = _split_snapshots(spark, "documents", "doc_id")
+    docs, old, new = (d.select("doc_id", "text") for d in (docs, old, new))
+
+    def build(batch, catalog=None):
+        return inc.simhash_components(batch, catalog, max_hamming=6)
+
+    _assert_maintained_equals_union(build, docs, old, new)
+
+
+def test_embedding_maintenance_equals_union_build(spark):
+    """With no bucket cap, a pair that collides in the union build
+    collides intra-snapshot or across the catalog join, and both
+    verify with the same rounded cosine: maintenance is the union
+    build."""
+    emb, old, new = _split_snapshots(spark, "embeddings", "vec_id")
+    kw = dict(threshold=0.35, dim=64, n_bits=4, n_tables=16, max_bucket_docs=None)
+
+    def build(batch, catalog=None):
+        return inc.embedding_components(batch, catalog, **kw)
+
+    _assert_maintained_equals_union(build, emb, old, new)
+
+
+def test_minhash_next_catalog_equals_union_signatures(spark):
+    """The next MinHash catalog stores exactly the signatures a build
+    over the union corpus stores (its labels may differ: cross edges
+    use the estimator, intra edges the exact Jaccard)."""
+    docs, old, new = _split_snapshots(spark, "documents", "doc_id")
+    kw = dict(k=5, num_hashes=32, bands=8, threshold=0.1, seed=42)
+    nxt = inc.minhash_components(
+        new, inc.minhash_components(old, **kw).catalog, **kw
+    ).catalog
+    union = inc.minhash_components(docs, **kw).catalog
+
+    def sigs(cat):
+        return {r["doc_id"]: r["signature"] for r in cat.collect()}
+
+    got = sigs(nxt)
+    assert len(got) == docs.count()
+    assert got == sigs(union)
+
+
+def test_maintenance_protocol_lives_only_in_maintain():
+    """The connected-components call and the ``!= component``
+    label-edge filter have one home in incremental.py, ``_maintain``:
+    the three family entry points only build values and pairs. Static
+    scan; no Spark session."""
+    import ast
+    import pathlib
+    import re
+
+    src = pathlib.Path(inc.__file__).read_text(encoding="utf-8")
+    funcs = [
+        (n.lineno, n.end_lineno, n.name)
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    rule = re.compile(r"connected_components\(|!=\s*F\.col\(\s*[\"']component")
+    owners = []
+    for m in rule.finditer(src):
+        line = src.count("\n", 0, m.start()) + 1
+        owners.append(
+            (line, {name for lo, hi, name in funcs if lo <= line <= hi})
+        )
+    assert len(owners) == 2, owners
+    assert all(o == {"_maintain"} for _, o in owners), owners
 
 
 def test_gram_catalog_merge_equals_union(spark):

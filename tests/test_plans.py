@@ -172,6 +172,54 @@ def test_lsh_candidates_one_band_bucket_exchange(spark, docs):
                 spark.conf.set(k, v)
 
 
+def test_cross_pairs_compute_agreement_once(spark, docs):
+    """The catalog x batch MinHash verify evaluates the interpreted
+    signature-agreement ``zip_with`` once per candidate: est_jaccard
+    is a generated column, so Catalyst cannot copy it into both the
+    pushed-down join condition and the projection."""
+    from textalyzer_spark.operators.incremental import (
+        incremental_minhash_pairs,
+        minhash_catalog,
+    )
+
+    kw = dict(k=3, num_hashes=16)
+    cat = minhash_catalog(docs.filter(F.col("doc_id") % 2 == 0), **kw)
+    q = incremental_minhash_pairs(
+        docs.filter(F.col("doc_id") % 2 == 1), cat.localCheckpoint(),
+        bands=4, threshold=0.3, **kw,
+    )
+    assert q.collect()
+    final = _executed_plan(q).split("== Initial Plan ==")[0]
+    assert final.count("zip_with(") == 1
+
+
+def test_next_catalog_runs_no_python_kernel(spark, docs):
+    """A maintenance step builds the batch's values once: the next
+    catalog reads the value table the labels were computed from, so
+    its executed plan has no Arrow/pandas kernel node (a second
+    signature pass would show as one)."""
+    from textalyzer_spark.operators.incremental import (
+        embedding_components,
+        minhash_components,
+        simhash_components,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cases = (
+        (minhash_components, docs, "doc_id", dict(k=3, num_hashes=16, bands=4)),
+        (simhash_components, docs, "doc_id", dict(max_hamming=3)),
+        (embedding_components, emb, "vec_id", dict(dim=64, n_bits=4, n_tables=4)),
+    )
+    for build, df, id_col, kw in cases:
+        old = df.filter(F.col(id_col) % 2 == 0)
+        new = df.filter(F.col(id_col) % 2 == 1)
+        cat = build(old, **kw).catalog.localCheckpoint()
+        nxt = build(new, cat, **kw).catalog
+        assert nxt.count() == df.count()
+        plan = _executed_plan(nxt)
+        assert "MapInArrow" not in plan and "MapInPandas" not in plan, build
+
+
 def test_signatures_run_in_arrow_batches_not_interpreted_hofs(spark, docs):
     """The engine rule: per-element array math must run as Arrow-batch
     numpy (mapInPandas/mapInArrow nodes), never as interpreted

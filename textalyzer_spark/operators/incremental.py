@@ -1,33 +1,58 @@
 """Incremental / cross-snapshot deduplication against a persisted
 catalog — the standard 100 TB workflow: a new crawl batch is deduped
-against the fingerprint/signature catalog of everything already
-ingested, then the catalog is advanced one snapshot.
+against the catalog of everything already ingested, then the catalog
+is advanced one snapshot.
 
 This is the batch analog of the streaming state-store dedup
-(streaming/jobs.py): the catalog plays the state store, an anti-join
-plays the state lookup. Reference semantics inherited: the exact
-fingerprint key is the same md5 the single-corpus
+(streaming/jobs.py): the catalog plays the state store, a join plays
+the state lookup. The exact fingerprint key is the md5 that
 :func:`~textalyzer_spark.operators.dedup.exact_dedup` groups on, and
 the minhash signatures/band buckets are bit-identical to
-:func:`~textalyzer_spark.operators.dedup.minhash_lsh_pairs` — a doc
-dropped incrementally would also have been dropped by the one-shot
-operator over the union corpus.
+:func:`~textalyzer_spark.operators.dedup.minhash_lsh_pairs`.
+
+**Near-dup cluster maintenance** is one protocol for the MinHash,
+SimHash and embedding families. A family catalog holds one row per
+ingested doc, ``(id, value, component)``: the doc's stored value (a
+signature, a simhash, a vector) and the min id of its near-dup
+cluster. :func:`minhash_components`, :func:`simhash_components` and
+:func:`embedding_components` each take ``(batch, catalog=None,
+<family params>)``, build the batch's values once, find the batch's
+intra pairs and, given a catalog, its batch x catalog cross pairs
+from the STORED values (old text is never re-read), and hand them to
+:func:`_maintain`, the protocol's only home:
+
+1. each catalog row with ``id != component`` becomes a label edge
+   ``id ~ component`` — the prior snapshot's clusters in one row per
+   doc, so a chain A~B (snapshot 1) + B~C (snapshot 2) merges;
+2. the nodes are catalog ids ∪ batch ids;
+3. one connected-components run over label, intra and cross edges
+   gives the labels; prior component ids are doc ids, so a merged
+   cluster re-minimizes to its true min id;
+4. the next snapshot is ``labels ⟕ (catalog values ∪ batch values)``:
+   a batch doc with no value (a MinHash doc with fewer than k tokens)
+   keeps a NULL value and its singleton label — dropping it would
+   un-ingest it from every later snapshot.
+
+``catalog=None`` is the first snapshot: no label edges, no cross
+pairs. Labels and the next snapshot come from ONE materialized value
+table, so the next snapshot runs no second signature kernel.
 
 Scale notes: the exact path is one hash shuffle of the NEW batch plus
-an anti-join against the catalog keyed on fingerprint (bucketed/
-broadcast by the optimizer — the catalog never rewrites). The minhash
-path moves every catalog and batch band row through ONE ``(band,
-bucket)`` exchange that counts each bucket's rows; singleton,
-one-sided and over-cap buckets are dropped there, so only buckets
-with a catalog row AND a batch row reach the pair join, whose traffic
-is proportional to bucket collisions, not catalog size. Signatures
-are num_hashes ints per doc — the only state a 10^12-doc catalog
-needs (no shingle storage), with
-similarity estimated from signature agreement (the classic MinHash
-estimator E[agree/num_hashes] = J).
+an anti-join against the catalog keyed on fingerprint. The minhash
+cross path moves every catalog and batch band row through ONE
+``(band, bucket)`` exchange that counts each bucket's rows;
+singleton, one-sided and over-cap buckets are dropped there, so pair
+traffic is proportional to bucket collisions, not catalog size.
+Signatures are num_hashes ints per doc — the only MinHash state a
+10^12-doc catalog needs (no shingle storage), with cross similarity
+estimated from signature agreement (E[agree/num_hashes] = J). Label
+edges add one row per cataloged doc, but only edge-touched nodes
+reach the driver union-find (graph.py).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,8 +185,9 @@ def _cross_pairs_from_sigs(
 ) -> DataFrame:
     """The band-join + signature-agreement core of
     :func:`incremental_minhash_pairs`, over ALREADY MATERIALIZED new
-    signatures — shared with the component-maintenance path so one
-    signature build feeds both intra and cross edges.
+    signatures — shared with :func:`minhash_components` and the
+    streaming maintenance job, so one signature build feeds every
+    consumer.
 
     Candidates come from :func:`~textalyzer_spark.operators.dedup.
     lsh_candidates`: one ``(band, bucket)`` exchange over catalog and
@@ -189,163 +215,16 @@ def _cross_pairs_from_sigs(
             F.zip_with("sig_o", "sig_n", lambda x, y: x == y), lambda v: v
         )
     )
+    est = agree / F.lit(float(num_hashes))
     return (
         cands.join(so, "doc_old")
         .join(sn, "doc_new")
-        .select(
-            "doc_old",
-            "doc_new",
-            (agree / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
+        # exploding a one-element array makes est_jaccard a generated
+        # column: a plain alias would be inlined into the pushed-down
+        # join condition AND the projection, one zip_with each
+        .select("doc_old", "doc_new", F.explode(F.array(est)).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
     )
-
-
-# --------------------------------------------------------------------------
-# near-dup component catalog maintenance (VERDICT r5 item 2)
-# --------------------------------------------------------------------------
-
-
-def minhash_component_catalog(
-    df: DataFrame,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket_docs: int | None = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """``(doc_id, signature, component)`` snapshot catalog — the
-    minhash signature catalog PLUS the snapshot's near-dup component
-    labels, so cluster membership carries FORWARD across snapshots
-    (plain ``minhash_catalog`` forgets which old docs were near-dups
-    of each other; a doc chain A~B (snapshot 1) + B~C (snapshot 2)
-    could then never merge). Labels = connected components of the
-    exact-verified ``minhash_lsh_pairs`` graph (component = min
-    doc_id). Storage stays O(num_hashes + 1) ints per doc.
-
-    EVERY ingested doc gets a catalog row — a doc too short for a
-    single k-shingle has ``signature`` NULL (it can never near-match
-    anything) but still carries its singleton component: dropping it
-    would silently un-ingest it from every later snapshot."""
-    from textalyzer_spark.operators.dedup import minhash_lsh_pairs
-    from textalyzer_spark.operators.graph import connected_components
-
-    # ONE kernel pass + ONE materialization feeds the stored
-    # signatures, the band cut and the exact-verified pair chain
-    built = shingle_signatures(df, k, num_hashes, seed, id_col, text_col)
-    pairs = minhash_lsh_pairs(
-        df, k=k, num_hashes=num_hashes, bands=bands, threshold=threshold,
-        seed=seed, max_bucket_docs=max_bucket_docs,
-        id_col=id_col, text_col=text_col, shingle_sigs=built,
-    )
-    docs = df.select(F.col(id_col).alias("doc_id")).distinct()
-    labels = connected_components(
-        pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ),
-        docs,
-    )
-    return labels.join(built.signatures, "doc_id", "left").select(
-        "doc_id", "signature", "component"
-    )
-
-
-def incremental_near_dup_components(
-    new_df: DataFrame,
-    catalog: DataFrame,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket_docs: int | None = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Cross-snapshot cluster MAINTENANCE: ``(doc_id, component)``
-    labels over catalog ∪ new batch, merging the new batch's near-dup
-    edges into the PRIOR components.
-
-    Three edge sets feed one union-find (graph.connected_components):
-
-    * the catalog's components collapsed to ``doc_id ~ component``
-      label edges — the prior snapshot's transitive closure, O(1)
-      rows per cataloged doc;
-    * the new batch's intra-batch pairs (exact-verified
-      ``minhash_lsh_pairs``, the same pass a fresh snapshot runs);
-    * cross batch-vs-catalog pairs from the STORED signatures
-      (``incremental_minhash_pairs`` — old text is never re-read;
-      the estimator is the only cross edge a signature catalog can
-      produce, by design).
-
-    Since prior component ids are themselves doc_ids, the min-label
-    components of this graph re-minimize to the true min doc_id of
-    each merged cluster — a snapshot-1 chain A~B merged by a
-    snapshot-2 B~C lands all three in one component.
-
-    Scale notes: label edges add one row per cataloged doc but only
-    edge-TOUCHED nodes reach the driver union-find (graph.py), and a
-    10^12-doc catalog's labels live in parquet next to its
-    signatures — the three edge scans are one pass each."""
-    from textalyzer_spark.operators.dedup import minhash_lsh_pairs
-    from textalyzer_spark.operators.graph import connected_components
-
-    old_edges = catalog.filter(
-        F.col("doc_id") != F.col("component")
-    ).select(F.col("doc_id").alias("src"), F.col("component").alias("dst"))
-    # ONE kernel pass + ONE materialization over the new batch feeds
-    # the intra-batch pair chain, the cross band join and the cross
-    # estimator's signature attach; each band cut derives from the
-    # checkpoint as a cheap narrow explode per consumer
-    built = shingle_signatures(new_df, k, num_hashes, seed, id_col, text_col)
-    intra = minhash_lsh_pairs(
-        new_df, k=k, num_hashes=num_hashes, bands=bands,
-        threshold=threshold, seed=seed, max_bucket_docs=max_bucket_docs,
-        id_col=id_col, text_col=text_col, shingle_sigs=built,
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    cross = _cross_pairs_from_sigs(
-        built.signatures, catalog.select("doc_id", "signature"),
-        num_hashes, bands, threshold, max_bucket_docs,
-    ).select(F.col("doc_old").alias("src"), F.col("doc_new").alias("dst"))
-    docs = (
-        catalog.select("doc_id")
-        .unionByName(new_df.select(F.col(id_col).alias("doc_id")))
-        .distinct()
-    )
-    return connected_components(
-        old_edges.unionByName(intra).unionByName(cross), docs
-    )
-
-
-def updated_minhash_component_catalog(
-    catalog: DataFrame,
-    new_df: DataFrame,
-    labels: DataFrame,
-    k: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The next ``(doc_id, signature, component)`` snapshot: old +
-    new signatures, re-labeled with the merged components from
-    :func:`incremental_near_dup_components` (labels covers the union
-    corpus, so prior entries whose cluster merged get the new min).
-    Shingle-less new docs keep NULL signatures, like the catalog
-    build."""
-    new_sigs = minhash_catalog(
-        new_df, k, num_hashes, seed, id_col, text_col
-    )
-    new_rows = (
-        new_df.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .join(new_sigs, "doc_id", "left")
-    )
-    all_sigs = catalog.select("doc_id", "signature").unionByName(new_rows)
-    return all_sigs.join(labels, "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -415,95 +294,137 @@ def _simhash_cross_from_values(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_component_catalog(
-    df: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """``(doc_id, simhash, component)`` snapshot catalog — the
-    one-int64-per-doc simhash catalog PLUS near-dup component labels
-    (the simhash analog of :func:`minhash_component_catalog`; simhash
-    emits a value for EVERY doc, token-less ones hash to 0, so no
-    NULL handling is needed). ONE simhash pass feeds both the stored
-    values and the pair chain."""
-    from textalyzer_spark.operators.dedup import simhash, simhash_near_pairs
+# --------------------------------------------------------------------------
+# near-dup cluster maintenance (one protocol, three families)
+# --------------------------------------------------------------------------
+
+
+class Maintained(NamedTuple):
+    """One maintenance step (see the module docstring)."""
+
+    #: ``(doc_id, component)`` for every doc of catalog ∪ batch
+    labels: DataFrame
+    #: the next ``(id, value, component)`` snapshot
+    catalog: DataFrame
+
+
+def _edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+
+
+def _maintain(
+    catalog: DataFrame | None,
+    batch_ids: DataFrame,
+    values: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    value_col: str,
+) -> Maintained:
+    """The maintenance protocol of the module docstring: ``batch_ids``
+    is the batch's ``id_col`` column, ``values`` its ``(id_col,
+    value_col)`` rows (docs without a value may be absent) and
+    ``edges`` its ``(src, dst)`` intra + cross pairs."""
     from textalyzer_spark.operators.graph import connected_components
 
-    sims = simhash(df, id_col, text_col).localCheckpoint()
-    pairs = simhash_near_pairs(
-        df, max_hamming, id_col=id_col, text_col=text_col, sims=sims
-    )
-    docs = df.select(F.col(id_col).alias("doc_id")).distinct()
+    ids, stored = batch_ids, values.select(id_col, value_col)
+    if catalog is not None:
+        labelled = catalog.filter(F.col(id_col) != F.col("component"))
+        edges = _edges(labelled, id_col, "component").unionByName(edges)
+        ids = catalog.select(id_col).unionByName(ids)
+        stored = catalog.select(id_col, value_col).unionByName(stored)
     labels = connected_components(
-        pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ),
-        docs,
+        edges, ids.select(F.col(id_col).alias("doc_id")).distinct()
     )
-    return sims.join(labels, "doc_id")
+    nxt = (
+        labels.withColumnRenamed("doc_id", id_col)
+        .join(stored, id_col, "left")
+        .select(id_col, value_col, "component")
+    )
+    return Maintained(labels, nxt)
 
 
-def incremental_simhash_components(
-    new_df: DataFrame,
-    catalog: DataFrame,
+def minhash_components(
+    batch: DataFrame,
+    catalog: DataFrame | None = None,
+    k: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    threshold: float = 0.5,
+    seed: int = 42,
+    max_bucket_docs: int | None = 1000,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> Maintained:
+    """MinHash cluster maintenance over a ``(doc_id, signature,
+    component)`` catalog. Intra edges are the exact-verified
+    ``minhash_lsh_pairs`` of the batch; cross edges are the
+    signature-agreement estimator against the stored signatures
+    (:func:`_cross_pairs_from_sigs`) — the only cross edge a signature
+    catalog can produce, by design. ONE shingle+signature kernel pass
+    (:func:`~textalyzer_spark.operators.dedup.shingle_signatures`)
+    feeds the intra pairs, the cross band join and the next snapshot's
+    signatures. Storage stays O(num_hashes + 1) ints per doc."""
+    from textalyzer_spark.operators.dedup import minhash_lsh_pairs
+
+    built = shingle_signatures(batch, k, num_hashes, seed, id_col, text_col)
+    edges = _edges(
+        minhash_lsh_pairs(
+            batch, k=k, num_hashes=num_hashes, bands=bands,
+            threshold=threshold, seed=seed, max_bucket_docs=max_bucket_docs,
+            id_col=id_col, text_col=text_col, shingle_sigs=built,
+        ),
+        "doc_a", "doc_b",
+    )
+    if catalog is not None:
+        cross = _cross_pairs_from_sigs(
+            built.signatures, catalog.select("doc_id", "signature"),
+            num_hashes, bands, threshold, max_bucket_docs,
+        )
+        edges = edges.unionByName(_edges(cross, "doc_old", "doc_new"))
+    return _maintain(
+        catalog, batch.select(F.col(id_col).alias("doc_id")),
+        built.signatures, edges, "doc_id", "signature",
+    )
+
+
+def simhash_components(
+    batch: DataFrame,
+    catalog: DataFrame | None = None,
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> DataFrame:
-    """Cross-snapshot cluster maintenance on the SIMHASH catalog:
-    ``(doc_id, component)`` over catalog ∪ batch — the same
-    label-edge + intra + cross union-find as
-    :func:`incremental_near_dup_components`, with the cheapest
-    possible catalog state (one int64 + one label per doc). ONE
-    simhash pass over the batch feeds intra and cross."""
+) -> Maintained:
+    """SimHash cluster maintenance over a ``(doc_id, simhash,
+    component)`` catalog — the cheapest catalog state (one int64 + one
+    label per doc). Simhash gives EVERY doc a value (token-less docs
+    hash to 0), and both the intra self-join and the cross join are
+    recall-complete with the exact Hamming verify, so maintaining
+    snapshot by snapshot labels like one build over the union. ONE
+    simhash pass feeds the intra pairs, the cross join and the next
+    snapshot."""
     from textalyzer_spark.operators.dedup import simhash, simhash_near_pairs
-    from textalyzer_spark.operators.graph import connected_components
 
-    old_edges = catalog.filter(
-        F.col("doc_id") != F.col("component")
-    ).select(F.col("doc_id").alias("src"), F.col("component").alias("dst"))
-    new_sh = simhash(new_df, id_col, text_col).localCheckpoint()
-    intra = simhash_near_pairs(
-        new_df, max_hamming, id_col=id_col, text_col=text_col, sims=new_sh
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    cross = _simhash_cross_from_values(
-        new_sh, catalog.select("doc_id", "simhash"), max_hamming
-    ).select(F.col("doc_old").alias("src"), F.col("doc_new").alias("dst"))
-    docs = (
-        catalog.select("doc_id")
-        .unionByName(new_df.select(F.col(id_col).alias("doc_id")))
-        .distinct()
+    sims = simhash(batch, id_col, text_col).localCheckpoint()
+    edges = _edges(
+        simhash_near_pairs(
+            batch, max_hamming, id_col=id_col, text_col=text_col, sims=sims
+        ),
+        "doc_a", "doc_b",
     )
-    return connected_components(
-        old_edges.unionByName(intra).unionByName(cross), docs
+    if catalog is not None:
+        cross = _simhash_cross_from_values(
+            sims, catalog.select("doc_id", "simhash"), max_hamming
+        )
+        edges = edges.unionByName(_edges(cross, "doc_old", "doc_new"))
+    return _maintain(
+        catalog, batch.select(F.col(id_col).alias("doc_id")),
+        sims, edges, "doc_id", "simhash",
     )
 
 
-def updated_simhash_component_catalog(
-    catalog: DataFrame,
-    new_df: DataFrame,
-    labels: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The next ``(doc_id, simhash, component)`` snapshot: old + new
-    values, re-labeled with the merged components."""
-    from textalyzer_spark.operators.dedup import simhash
-
-    new_sh = simhash(new_df, id_col, text_col)
-    all_sh = catalog.select("doc_id", "simhash").unionByName(new_sh)
-    return all_sh.join(labels, "doc_id")
-
-
-# --------------------------------------------------------------------------
-# embedding near-dup component maintenance (completes the matrix:
-# minhash / simhash / embedding catalogs all carry labels forward)
-# --------------------------------------------------------------------------
-
-
-def embedding_component_catalog(
-    vectors: DataFrame,
+def embedding_components(
+    batch: DataFrame,
+    catalog: DataFrame | None = None,
     threshold: float = 0.95,
     dim: int = 64,
     n_bits: int = 8,
@@ -512,162 +433,79 @@ def embedding_component_catalog(
     max_bucket_docs: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> DataFrame:
-    """``(vec_id, embedding, component)`` snapshot catalog for the
-    EMBEDDING near-dup family: the vectors themselves are the catalog
-    state (cosine needs them — dim x 8 bytes/doc, the same state any
-    vector store carries) plus the snapshot's LSH near-dup component
-    labels. Bucket keys are NOT stored: they re-derive from the
-    deterministic hyperplanes (dim, n_bits, n_tables, seed) on read,
-    cheaper than persisting n_tables rows per vector."""
-    from textalyzer_spark.operators.graph import connected_components
-    from textalyzer_spark.operators.similarity import (
-        embedding_near_dup_pairs_lsh,
-    )
+) -> Maintained:
+    """Embedding cluster maintenance over a ``(vec_id, embedding,
+    component)`` catalog: the vectors themselves are the stored values
+    (cosine needs them — the state any vector store carries). Bucket
+    keys are NOT stored: they re-derive from the deterministic
+    hyperplanes (dim, n_bits, n_tables, seed) on read, cheaper than
+    persisting n_tables rows per vector.
 
-    pairs = embedding_near_dup_pairs_lsh(
-        vectors, threshold, dim, n_bits, n_tables, seed,
-        max_bucket_docs, id_col, vec_col,
-    )
-    docs = vectors.select(F.col(id_col).alias("doc_id")).distinct()
-    labels = connected_components(
-        pairs.select(
-            F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
-        ),
-        docs,
-    )
-    return vectors.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).join(labels.withColumnRenamed("doc_id", "vec_id"), "vec_id")
-
-
-def incremental_embedding_components(
-    new_vectors: DataFrame,
-    catalog: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
-    n_bits: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    max_bucket_docs: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cross-snapshot cluster maintenance on the embedding catalog:
-    ``(doc_id, component)`` over catalog ∪ batch — label edges +
-    intra-batch LSH pairs + cross batch-vs-catalog LSH pairs into one
-    union-find, like the minhash/simhash analogs.
-
-    The cross candidate join is id-only on (table, bucket) — the same
-    16-bytes-per-row shuffle discipline as the single-corpus LSH
-    operator — with vectors attached afterward for the exact-cosine
-    verify (same ``_score_pairs`` rounding as every similarity
-    path)."""
-    from pyspark.sql.window import Window as _W
-
-    from textalyzer_spark.operators.graph import connected_components
+    ONE python hyperplane pass over the batch feeds the intra LSH
+    pairs (``embedding_near_dup_pairs_lsh(buckets=)``) and the cross
+    join. The cross verify is the blocked one of the intra path
+    applied between two tables: catalog and batch vectors cross the
+    Arrow boundary once per (table, block pair), not once per
+    candidate, with the same rounded-cosine kernel. Constant block
+    ids 0 (catalog) / 1 (batch) keep the kernel off its diagonal
+    dedup (the sides are disjoint id sets); edge orientation is
+    irrelevant to the union-find. ``max_bucket_docs`` caps a
+    bucket's COMBINED catalog + batch occupancy on the cross side."""
     from textalyzer_spark.operators.similarity import (
         _block_pairs_kernel,
+        _bucket_blocks,
         _hyperplane_buckets,
         embedding_near_dup_pairs_lsh,
     )
 
-    old_edges = catalog.filter(
-        F.col("vec_id") != F.col("component")
-    ).select(F.col("vec_id").alias("src"), F.col("component").alias("dst"))
-    cat_v = catalog.select("vec_id", "embedding")
-    new_v = new_vectors.select(
+    vectors = batch.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    # ONE python hyperplane pass over the new batch feeds BOTH the
-    # intra-batch join (buckets= pass-through) and the cross join
-    # (round 8 — previously the identical bucket table was computed
-    # twice); the catalog side re-derives from its stored vectors by
-    # design (bucket keys are deliberately not persisted)
     nb = _hyperplane_buckets(
-        new_v, "vec_id", dim, n_bits, n_tables, seed
+        vectors, "vec_id", dim, n_bits, n_tables, seed
     ).localCheckpoint()
-    intra = embedding_near_dup_pairs_lsh(
-        new_vectors, threshold, dim, n_bits, n_tables, seed,
-        max_bucket_docs, id_col, vec_col, buckets=nb,
-    ).select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-    ob = _hyperplane_buckets(cat_v, "vec_id", dim, n_bits, n_tables, seed)
-    if max_bucket_docs is not None:
-        ok = (
-            ob.select("table", "bucket")
-            .unionAll(nb.select("table", "bucket"))
-            .groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= max_bucket_docs)
-            .select("table", "bucket")
-        )
-        ob = ob.join(ok, ["table", "bucket"])
-        nb = nb.join(ok, ["table", "bucket"])
-
-    # blocked cross-side verify (the embedding_near_dup_pairs_lsh
-    # round-8 rewrite applied between two tables): catalog and batch
-    # vectors cross the Arrow boundary once per (table, block-pair)
-    # instead of once per candidate pair; constant bx=0 / by=1 keeps
-    # the kernel off its diagonal-dedup path (the sides are disjoint
-    # id sets). Edge orientation is irrelevant to the union-find.
-    def _blocks(side: DataFrame, tag: str, flag: int) -> DataFrame:
-        nblk = F.ceil(
-            F.count(F.lit(1)).over(_W.partitionBy("table", "bucket"))
-            / F.lit(1024)
-        ).cast("long")
-        t = side.withColumn("_nb", nblk).withColumn(
-            "_blk",
-            F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.col("_nb"))
-            .cast("int"),
-        )
-        return t.groupBy("table", "bucket", "_blk").agg(
-            F.collect_list(
-                F.struct(
-                    F.col("vec_id").alias("vid"),
-                    F.col("_vec_vec_id").alias("vec"),
-                )
-            ).alias(f"i{tag}")
-        ).select(
-            "table", "bucket", F.lit(flag).alias(f"b{tag}"), f"i{tag}"
-        )
-
-    id_type = dict(new_vectors.dtypes)[id_col]
-    cross = (
-        _blocks(ob, "x", 0)
-        .join(_blocks(nb, "y", 1), ["table", "bucket"])
-        .mapInPandas(
-            _block_pairs_kernel(threshold),
-            f"vec_a {id_type}, vec_b {id_type}, cosine double",
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
+    edges = _edges(
+        embedding_near_dup_pairs_lsh(
+            batch, threshold, dim, n_bits, n_tables, seed,
+            max_bucket_docs, id_col, vec_col, buckets=nb,
+        ),
+        "vec_a", "vec_b",
     )
-
-    docs = (
-        catalog.select(F.col("vec_id").alias("doc_id"))
-        .unionByName(new_vectors.select(F.col(id_col).alias("doc_id")))
-        .distinct()
-    )
-    return connected_components(
-        old_edges.unionByName(intra).unionByName(cross), docs
-    )
-
-
-def updated_embedding_component_catalog(
-    catalog: DataFrame,
-    new_vectors: DataFrame,
-    labels: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The next ``(vec_id, embedding, component)`` snapshot: old +
-    new vectors, re-labeled with the merged components."""
-    new_v = new_vectors.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    all_v = catalog.select("vec_id", "embedding").unionByName(new_v)
-    return all_v.join(
-        labels.withColumnRenamed("doc_id", "vec_id"), "vec_id"
+    if catalog is not None:
+        ob = _hyperplane_buckets(
+            catalog.select("vec_id", "embedding"),
+            "vec_id", dim, n_bits, n_tables, seed,
+        )
+        if max_bucket_docs is not None:
+            ok = (
+                ob.select("table", "bucket")
+                .unionAll(nb.select("table", "bucket"))
+                .groupBy("table", "bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") <= max_bucket_docs)
+                .select("table", "bucket")
+            )
+            ob = ob.join(ok, ["table", "bucket"])
+            nb = nb.join(ok, ["table", "bucket"])
+        x = _bucket_blocks(ob).select(
+            "table", "bucket", F.lit(0).alias("bx"), F.col("items").alias("ix")
+        )
+        y = _bucket_blocks(nb).select(
+            "table", "bucket", F.lit(1).alias("by"), F.col("items").alias("iy")
+        )
+        id_type = dict(batch.dtypes)[id_col]
+        cross = (
+            x.join(y, ["table", "bucket"])
+            .mapInPandas(
+                _block_pairs_kernel(threshold),
+                f"vec_a {id_type}, vec_b {id_type}, cosine double",
+            )
+            .dropDuplicates(["vec_a", "vec_b"])
+        )
+        edges = edges.unionByName(_edges(cross, "vec_a", "vec_b"))
+    return _maintain(
+        catalog, vectors.select("vec_id"), vectors, edges,
+        "vec_id", "embedding",
     )
 
 

@@ -368,8 +368,6 @@ def embedding_near_dup_pairs_lsh(
     (tests/test_dedup_similarity.py plants such a family and
     demonstrates both the blowup and the guard).
     """
-    from pyspark.sql.window import Window as _W
-
     if buckets is not None:
         # ALREADY MATERIALIZED ``_hyperplane_buckets`` table of the
         # same (vectors, dim, n_bits, n_tables, seed) — the
@@ -408,21 +406,7 @@ def embedding_near_dup_pairs_lsh(
     # 1.2-1.3 s at sf0.1). Buckets larger than block_size split into
     # hash sub-blocks exactly like embedding_near_dup_pairs, so a
     # mega-bucket still becomes many bounded tasks, never one row.
-    vec_field = "_vec_vec_id"
-    nb = F.ceil(
-        F.count(F.lit(1)).over(_W.partitionBy("table", "bucket"))
-        / F.lit(block_size)
-    ).cast("long")
-    t = vs.withColumn("_nb", nb).withColumn(
-        "_blk",
-        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.col("_nb"))
-        .cast("int"),
-    )
-    blocked = t.groupBy("table", "bucket", "_blk").agg(
-        F.collect_list(
-            F.struct(F.col("vec_id").alias("vid"), F.col(vec_field).alias("vec"))
-        ).alias("items")
-    )
+    blocked = _bucket_blocks(vs, block_size)
     x = blocked.select(
         "table", "bucket", F.col("_blk").alias("bx"), F.col("items").alias("ix")
     )
@@ -436,6 +420,33 @@ def embedding_near_dup_pairs_lsh(
         f"vec_a {id_type}, vec_b {id_type}, cosine double",
     )
     return scored.dropDuplicates(["vec_a", "vec_b"])
+
+
+def _bucket_blocks(vs: DataFrame, block_size: int = 1024) -> DataFrame:
+    """``(table, bucket, _blk, items)`` — the blocking rule of the
+    LSH verify, shared by the intra-bucket path
+    (:func:`embedding_near_dup_pairs_lsh`) and the catalog x batch
+    path (``incremental.embedding_components``): each ``(table,
+    bucket)`` of a ``_hyperplane_buckets(..., "vec_id", ...)`` table
+    splits into ``ceil(n / block_size)`` xxhash64 sub-blocks, each
+    one row of ``(vid, vec)`` structs, so a mega-bucket becomes many
+    bounded kernel rows."""
+    from pyspark.sql.window import Window as _W
+
+    nb = F.ceil(
+        F.count(F.lit(1)).over(_W.partitionBy("table", "bucket"))
+        / F.lit(block_size)
+    ).cast("long")
+    t = vs.withColumn("_nb", nb).withColumn(
+        "_blk",
+        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.col("_nb"))
+        .cast("int"),
+    )
+    return t.groupBy("table", "bucket", "_blk").agg(
+        F.collect_list(
+            F.struct(F.col("vec_id").alias("vid"), F.col("_vec_vec_id").alias("vec"))
+        ).alias("items")
+    )
 
 
 def _seed_sample(v: DataFrame, sample_size: int) -> list:

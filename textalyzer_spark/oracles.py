@@ -549,7 +549,7 @@ def incremental_near_dup_groups_sql(
     old_where: str = "WHERE doc_id % 2 = 0",
     new_where: str = "WHERE doc_id % 2 = 1",
 ) -> str:
-    """Twin of ``incremental.incremental_near_dup_components`` over a
+    """Twin of ``incremental.minhash_components`` over a
     corpus split into a prior snapshot (catalog) and a new batch: the
     union corpus is labeled with the SAME hybrid edge semantics the
     two-snapshot engine path computes —
@@ -642,7 +642,7 @@ def incremental_simhash_groups_sql(
     old_where: str = "WHERE doc_id % 2 = 0",
     new_where: str = "WHERE doc_id % 2 = 1",
 ) -> str:
-    """Twin of ``incremental.incremental_simhash_components``: the
+    """Twin of ``incremental.simhash_components``: the
     union corpus labeled over brute-force simhash pairs (intra-old,
     intra-new and cross — the engine's combination banding is
     recall-complete, so the edge SETS are identical by construction;
@@ -944,7 +944,7 @@ def incremental_embedding_groups_sql(
     old_where: str = "WHERE vec_id % 2 = 0",
     new_where: str = "WHERE vec_id % 2 = 1",
 ) -> str:
-    """Twin of ``incremental.incremental_embedding_components`` with
+    """Twin of ``incremental.embedding_components`` with
     the embeddings table split into a catalog snapshot and a new
     batch: the union corpus labeled over per-snapshot intra LSH pair
     SQL + cross bucket-collision pairs (same hyperplane constants,

@@ -396,6 +396,22 @@ def streaming_near_dup(
     )
 
 
+def _prior_snapshot(
+    spark: SparkSession, catalog_dir: str, slot: int, empty_schema: str
+) -> DataFrame:
+    """The catalog as of before ``slot``: the latest snapshot committed
+    below it, or an empty ``empty_schema`` frame before the first
+    commit. Bounding the read by slot makes a crash-replayed
+    micro-batch see the same prior catalog even when its own commit
+    already landed."""
+    from textalyzer_spark.operators.incremental import latest_catalog_snapshot
+
+    prev = latest_catalog_snapshot(spark, catalog_dir, max_snapshot=slot - 1)
+    if prev:
+        return spark.read.parquet(f"{catalog_dir}/snapshot={prev}")
+    return spark.createDataFrame([], empty_schema)
+
+
 def streaming_catalog_maintenance(
     spark: SparkSession,
     input_dir: str,
@@ -447,24 +463,22 @@ def streaming_catalog_maintenance(
     prior occurrences always stay first."""
     from textalyzer_spark.operators import incremental as inc
 
-    if method not in ("exact", "minhash", "bloom", "span"):
+    # the empty catalog of each method, read before the first commit
+    empty = {
+        "exact": "fingerprint string, keep_id bigint",
+        "minhash": "doc_id bigint, signature array<bigint>",
+        "bloom": "bit int",
+        "span": "h string, keep_id bigint, keep_start int",
+    }
+    if method not in empty:
         raise ValueError(f"unknown method {method!r}")
     stream = _stream(spark, input_dir, schema=schema)
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         slot = int(batch_id) + 1
-        prev = inc.latest_catalog_snapshot(
-            sp, catalog_dir, max_snapshot=slot - 1
-        )
+        cat = _prior_snapshot(sp, catalog_dir, slot, empty[method])
         if method == "exact":
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame(
-                    [], "fingerprint string, keep_id bigint"
-                )
-            )
             # output + catalog are two ACTIONS over the survivors —
             # the derived-corpus barrier rule (BENCH.md A/B)
             out = inc.incremental_exact_dedup(batch_df, cat).localCheckpoint()
@@ -472,13 +486,6 @@ def streaming_catalog_maintenance(
         elif method == "span":
             from textalyzer_spark.operators import span_dedup as sd
 
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame(
-                    [], "h string, keep_id bigint, keep_start int"
-                )
-            )
             # rebuilt docs + catalog are two ACTIONS over the batch's
             # spans — derive the span table ONCE and materialize it so
             # both consumers share the line-explode + lead window +
@@ -494,11 +501,6 @@ def streaming_catalog_maintenance(
         elif method == "bloom":
             from textalyzer_spark.operators import sketch as sk
 
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame([], "bit int")
-            )
             # survivors vs the PRIOR bits, then fold the batch's own
             # fingerprints in — two actions over the batch bits
             out = sk.bloom_dedup_new(batch_df, cat).localCheckpoint()
@@ -510,13 +512,6 @@ def streaming_catalog_maintenance(
                 ),
             )
         else:
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame(
-                    [], "doc_id bigint, signature array<bigint>"
-                )
-            )
             # every ingested doc gets a catalog row — shingle-less docs
             # carry NULL signatures (the pinned component-catalog rule;
             # minhash_catalog itself has no row for them), which the
@@ -592,27 +587,26 @@ def streaming_sketch_maintenance(
     no prior: NULL tv_distance), with the merged histogram committed
     as the next snapshot exactly like 'hist'."""
     from textalyzer_spark.functions.tokenize import ws_tokens_col
-    from textalyzer_spark.operators import incremental as inc
     from textalyzer_spark.operators import sketch as sk
 
-    if kind not in ("hll", "cms", "hist", "drift"):
+    # the empty sketch of each kind, read before the first commit
+    empty = {
+        "hll": "bucket int, rho int",
+        "cms": "r int, bucket int, cnt bigint",
+        "hist": "bucket bigint, cnt bigint",
+        "drift": "bucket bigint, cnt bigint",
+    }
+    if kind not in empty:
         raise ValueError(f"unknown sketch kind {kind!r}")
     stream = _stream(spark, input_dir, schema=schema)
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         slot = int(batch_id) + 1
-        prev = inc.latest_catalog_snapshot(
-            sp, catalog_dir, max_snapshot=slot - 1
-        )
+        cat = _prior_snapshot(sp, catalog_dir, slot, empty[kind])
         toks = batch_df.select(F.explode(ws_tokens_col("text")).alias("tok"))
         if kind == "hll":
             batch_sk = sk.hll_registers(toks, "tok", p=p, salt=salt)
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame([], "bucket int, rho int")
-            )
             # estimate + snapshot are two ACTIONS over the merged
             # registers — the derived-corpus barrier rule (BENCH.md)
             merged = sk.hll_merge(cat, batch_sk).localCheckpoint()
@@ -622,11 +616,6 @@ def streaming_sketch_maintenance(
                 batch_df.select(F.length("text").alias("_len")),
                 "_len",
                 bucket_width=hist_width,
-            )
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame([], "bucket bigint, cnt bigint")
             )
             merged = sk.histogram_merge(cat, batch_sk).localCheckpoint()
             out = sk.histogram_quantiles(merged, bucket_width=hist_width)
@@ -638,21 +627,11 @@ def streaming_sketch_maintenance(
                 "_len",
                 bucket_width=hist_width,
             ).localCheckpoint()
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame([], "bucket bigint, cnt bigint")
-            )
             out = sk.histogram_drift(cat, batch_sk)
             merged = sk.histogram_merge(cat, batch_sk)
         else:
             batch_sk = sk.cms_table(
                 toks, "tok", depth=depth, width_p=width_p, salt=salt
-            )
-            cat = (
-                sp.read.parquet(f"{catalog_dir}/snapshot={prev}")
-                if prev
-                else sp.createDataFrame([], "r int, bucket int, cnt bigint")
             )
             merged = sk.cms_merge(cat, batch_sk).localCheckpoint()
             out = merged.agg(

@@ -132,16 +132,8 @@ def main(argv: list[str] | None = None) -> None:
             try:
                 cat = inc.read_catalog(spark, args.catalog)
             except FileNotFoundError:
-                cat = None
-            if cat is None:
-                nxt = inc.minhash_component_catalog(docs)
-                out = nxt.select("doc_id", "component")
-            else:
-                labels = inc.incremental_near_dup_components(docs, cat)
-                nxt = inc.updated_minhash_component_catalog(
-                    cat, docs, labels
-                )
-                out = labels
+                cat = None  # the first snapshot
+            out, nxt = inc.minhash_components(docs, cat)
             snap = inc.write_catalog_snapshot(nxt, args.catalog)
             print(json.dumps({"catalog_snapshot": snap}))
         elif args.analysis == "shard_write":
