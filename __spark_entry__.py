@@ -1091,11 +1091,14 @@ def q_pipeline_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("quality_score") >= PIPELINE_QMIN)
         .drop("quality_score")
     ).select("doc_id", F.col("clean_text").alias("text"))
+    # anti join: a doc_id with any contaminated row is dropped whole,
+    # and a repeated doc_id does not fan the join out
     decont = clean.join(
         contamination_stats(clean, bench, k=5)
-        .filter(F.col("n_contaminated") == 0)
+        .filter(F.col("n_contaminated") > 0)
         .select("doc_id"),
         "doc_id",
+        "left_anti",
     )
     # exact dedup as a window filter (round 8): keep rows whose
     # doc_id is the minimum over their md5 fingerprint — identical

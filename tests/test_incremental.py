@@ -135,12 +135,17 @@ def test_contamination_stats_planted(spark):
             (3, "tiny doc"),
             # one benchmark 5-gram twice: counted per occurrence
             (4, "the quick brown fox jumps and the quick brown fox jumps"),
+            # NULL text has no tokens; a non-ASCII row takes
+            # token_table's per-row fallback and still matches
+            (5, None),
+            (6, "Ça: the QUICK brown fox jumps"),
         ],
         "doc_id bigint, text string",
     )
     out = {
         r["doc_id"]: r for r in contamination_stats(train, bench, k=5).collect()
     }
+    assert len(out) == 6
     r1 = out[1]
     # tokens: once the quick brown fox jumps over everything -> 4
     # 5-grams; positions 2-4 ('the quick brown fox jumps',
@@ -156,6 +161,9 @@ def test_contamination_stats_planted(spark):
     assert out[4]["n_kgrams"] == 7
     assert out[4]["n_contaminated"] == 2
     assert out[4]["contamination_frac"] == 2 / 7
+    assert (out[5]["n_kgrams"], out[5]["contamination_frac"]) == (0, None)
+    # tokens: ça the quick brown fox jumps -> 2 5-grams, 1 benchmark span
+    assert (out[6]["n_kgrams"], out[6]["n_contaminated"]) == (2, 1)
 
 
 def test_incremental_simhash_two_batches(spark):
@@ -222,6 +230,9 @@ def test_contamination_by_benchmark_attribution(spark):
         [
             (100, "the quick brown fox jumps over the lazy dog"),
             (200, "pack my box with five dozen liquor jugs"),
+            # shares 'the quick brown fox jumps' with bench 100: each
+            # hit on it fans out to both benchmark docs
+            (300, "see the quick brown fox jumps high"),
         ],
         "doc_id bigint, text string",
     )
@@ -239,10 +250,12 @@ def test_contamination_by_benchmark_attribution(spark):
         (r["doc_id"], r["bench_doc"]): r["n_overlap_kgrams"]
         for r in contamination_by_benchmark(train, bench, k=5).collect()
     }
-    # doc 1 shares 2 of its 5-gram occurrences with bench 100 only;
-    # doc 2 shares 4 with bench 200 only; doc 3 appears nowhere; doc 4
-    # repeats one bench-100 5-gram
-    assert out == {(1, 100): 2, (2, 200): 4, (4, 100): 2}
+    # doc 1 shares 2 of its 5-gram occurrences with bench 100, one of
+    # them also with bench 300; doc 2 shares 4 with bench 200 only;
+    # doc 3 appears nowhere; doc 4 repeats the 5-gram of 100 and 300
+    assert out == {
+        (1, 100): 2, (1, 300): 1, (2, 200): 4, (4, 100): 2, (4, 300): 2,
+    }
 
 
 def test_incremental_simhash_component_maintenance(spark):
@@ -478,3 +491,24 @@ def test_contamination_catalog_k_mismatch_raises(spark):
     assert ok[0]["n_contaminated"] > 0
     with pytest.raises(Exception, match="k mismatch"):
         contamination_from_catalog(docs, cat3, k=5).collect()
+
+
+def test_contamination_catalog_cap_raises_on_driver(spark, monkeypatch):
+    """A catalog over MAX_CATALOG_SHINGLES fails while the query is
+    built, before a scoring task is planned."""
+    import pytest
+
+    from textalyzer_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")],
+        "doc_id bigint, text string",
+    )
+    cat3 = dedup.benchmark_gram_catalog(docs, k=3)  # 4 shingles
+    monkeypatch.setattr(dedup, "MAX_CATALOG_SHINGLES", 4)
+    assert dedup.contamination_from_catalog(docs, cat3, k=3).count() == 1
+    monkeypatch.setattr(dedup, "MAX_CATALOG_SHINGLES", 3)
+    with pytest.raises(dedup.CatalogTooLarge, match="MAX_CATALOG_SHINGLES=3"):
+        dedup.contamination_from_catalog(docs, cat3, k=3)
+    with pytest.raises(ValueError):
+        dedup.contamination_stats(docs, docs, k=3)

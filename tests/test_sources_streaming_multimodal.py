@@ -3,6 +3,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -506,6 +508,8 @@ def test_streaming_stateless_twins_match_batch(spark, tmp_path):
     b2 = [
         ("d3", "the quick brown fox jumps over the lazy benchmark dog"),
         ("d4", "short"),
+        # a repeated doc_id: every operator emits one row per input row
+        ("d3", "again the quick brown fox jumps over"),
     ]
     bench = spark.createDataFrame(
         [("b1", "quick brown fox jumps over")], "doc_id string, text string"
@@ -541,25 +545,27 @@ def test_streaming_stateless_twins_match_batch(spark, tmp_path):
         "append"
     ).parquet(inp)
     drain()
-    assert len(got["pii"]) == 4
+    assert len(got["pii"]) == 5
     assert {r["doc_id"] for r in got["pii"][2:]} == {"d3", "d4"}
 
-    def by_id(rows):
-        return {r["doc_id"]: tuple(r)[1:] for r in rows}
+    def rows(got_rows):
+        # a row multiset: a dict keyed by doc_id would hide a merge
+        return Counter(tuple(r) for r in got_rows)
 
     batch = spark.read.parquet(inp)
-    assert by_id(got["pii"]) == by_id(pii_stats(batch).collect())
+    assert rows(got["pii"]) == rows(pii_stats(batch).collect())
     sb = stratified_sample(
         lang_id(batch).select("doc_id", "pred_lang"), "pred_lang", rates,
         0.0, salt="s",
     )
-    assert by_id(got["strat"]) == by_id(sb.collect())
+    assert rows(got["strat"]) == rows(sb.collect())
     assert len(got["strat"]) >= n_strat_1
     cb = contamination_stats(batch, bench, k=5)
-    assert by_id(got["cont"]) == by_id(cb.collect())
-    # the planted benchmark 5-gram is detected through the stream path
-    cont = by_id(got["cont"])["d3"]
-    assert cont[1] >= 1 and cont[2] > 0
+    assert rows(got["cont"]) == rows(cb.collect())
+    # the planted benchmark 5-gram is detected through the stream
+    # path, on both d3 rows
+    cont = [tuple(r)[1:] for r in got["cont"] if r["doc_id"] == "d3"]
+    assert sorted(cont) == [(3, 1, 1 / 3), (6, 1, 1 / 6)]
 
 
 def test_streaming_catalog_maintenance_exact(spark, tmp_path):

@@ -102,13 +102,15 @@ def clean_corpus(
     if decontaminate_against is not None:
         from textalyzer_spark.operators.dedup import contamination_stats
 
+        # a doc_id with any contaminated row is dropped whole
         clean = clean.join(
             contamination_stats(
                 clean, decontaminate_against, k=contamination_k
             )
-            .filter(F.col("n_contaminated") == 0)
+            .filter(F.col("n_contaminated") > 0)
             .select("doc_id"),
             "doc_id",
+            "left_anti",
         )
     keep_exact = (
         clean.groupBy(F.md5("text").alias("_fp"))

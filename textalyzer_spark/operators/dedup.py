@@ -461,47 +461,25 @@ def minhash_lsh_pairs(
     )
 
 
-def contamination_stats(
-    df: DataFrame,
-    benchmark: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def contamination_stats(df: DataFrame, benchmark: DataFrame, k: int = 8) -> DataFrame:
     """Benchmark-contamination detection (the decontamination step of
     a training-data pipeline, public recipe: GPT-3 appendix C /
-    PaLM-style n-gram overlap): for every training document, the
-    fraction of its token ``k``-gram occurrences that appear anywhere
-    in the ``benchmark`` corpus —
+    PaLM-style n-gram overlap): for every ``(doc_id, text)`` training
+    row, the fraction of its token ``k``-gram occurrences that appear
+    anywhere in the ``benchmark`` corpus —
 
     ``(doc_id, n_kgrams, n_contaminated, contamination_frac)``
 
     A doc with ``contamination_frac > 0`` shares at least one k-token
     span verbatim with the benchmark; filter or flag downstream.
     ``contamination_frac`` is an unrounded double of integer counts
-    (bit-identical cross-engine).
-
-    Scale shape: the benchmark k-gram set is DISTINCT and tiny
-    relative to the corpus (benchmarks are thousands of docs, the
-    corpus 10^12) — Catalyst broadcasts it under AQE; the corpus side
-    is one shingle pass + a left semi-style join + one groupBy on
-    doc_id. Docs with < k tokens have no k-grams: n_kgrams=0 and a
-    NULL fraction."""
-    return contamination_from_catalog(
-        df,
-        benchmark_gram_catalog(benchmark, k, bench_text_col),
-        k=k,
-        id_col=id_col,
-        text_col=text_col,
-    )
+    (bit-identical cross-engine). Docs with < k tokens have no
+    k-grams: n_kgrams=0 and a NULL fraction. One output row per input
+    row (see :func:`contamination_from_catalog`)."""
+    return contamination_from_catalog(df, benchmark_gram_catalog(benchmark, k), k=k)
 
 
-def benchmark_gram_catalog(
-    benchmark: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
+def benchmark_gram_catalog(benchmark: DataFrame, k: int = 8) -> DataFrame:
     """The persistable decontamination state: the benchmark corpus's
     DISTINCT token ``k``-gram set, one ``(shingle)`` row each —
     bounded by benchmark size (thousands of docs), never the training
@@ -511,9 +489,7 @@ def benchmark_gram_catalog(
     union-distinct: merge(cat(A), cat(B)) == cat(A ∪ B) exactly —
     the membership analog of the sketch-family merges)."""
     return (
-        doc_feature_counts(
-            benchmark.select(F.col(text_col).alias("text")), token_kgrams(k)
-        )
+        doc_feature_counts(benchmark.select("text"), token_kgrams(k))
         .select(F.col("feature").alias("shingle"))
         .distinct()
     )
@@ -531,106 +507,146 @@ def merge_gram_catalogs(*catalogs: DataFrame) -> DataFrame:
     return out.distinct()
 
 
-def contamination_from_catalog(
-    df: DataFrame,
-    catalog: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+# The collected catalog rides in the closure of every contamination
+# task, and each Python worker hashes all of it once per Arrow batch.
+# A random 5-gram costs ~36 closure bytes: at the cap a task's closure
+# is ~37 MB and a batch's hash build ~0.4 s on one Xeon core.
+# Benchmarks are thousands of documents, far below it.
+MAX_CATALOG_SHINGLES = 1 << 20
+
+
+class CatalogTooLarge(ValueError):
+    """A gram catalog over :data:`MAX_CATALOG_SHINGLES` shingles."""
+
+
+def _collect_catalog(shingles, k: int):
+    """The sorted distinct non-NULL ``shingles`` of a catalog column
+    collected to the driver, checked there: over the cap it raises
+    :class:`CatalogTooLarge`, and on a shingle that is not ``k``
+    space-joined tokens a k-mismatch ``ValueError`` (grams of another
+    length never match, so every doc would silently read clean)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    catalog = pc.unique(shingles.cast(pa.string())).drop_null().sort()
+    if len(catalog) > MAX_CATALOG_SHINGLES:
+        raise CatalogTooLarge(
+            f"gram catalog has {len(catalog)} distinct shingles, over "
+            f"MAX_CATALOG_SHINGLES={MAX_CATALOG_SHINGLES}"
+        )
+    bad = catalog.filter(pc.not_equal(pc.count_substring(catalog, " "), k - 1))
+    if len(bad):
+        raise ValueError(f"catalog shingle is not a {k}-gram (k mismatch): {bad[0]}")
+    return catalog
+
+
+def _score_against(df: DataFrame, catalog, k: int, emit, schema: str) -> DataFrame:
+    """The one contamination scorer, row-local: a ``mapInArrow`` over
+    ``df``'s ``(doc_id, text)`` rows. It builds every token ``k``-gram
+    occurrence with ``token_table``/``kgram_table``, one
+    ``SLICE_ROWS``-row slice at a time, and probes them in ``catalog``
+    once per Arrow batch (each ``pc.index_in`` hashes the whole
+    catalog). ``emit(batch, rows, hit)`` maps the batch, each
+    occurrence's row and its catalog index (-1 on a miss) to the
+    ``schema`` columns."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from textalyzer_spark.functions.tokenize import SLICE_ROWS, kgram_table, token_table
+
+    def run(batches):
+        for batch in batches:
+            starts = range(0, batch.num_rows, SLICE_ROWS)
+            tables = [
+                kgram_table(*token_table(batch.column(1).slice(i, SLICE_ROWS)), k)
+                for i in starts
+            ]
+            if tables:
+                grams = pa.chunked_array([g for g, _ in tables], pa.string())
+                rows = np.concatenate([r + i for i, (_, r) in zip(starts, tables)])
+                hit = pc.index_in(grams, value_set=catalog).fill_null(-1).to_numpy()
+                yield pa.RecordBatch.from_pydict(emit(batch, rows, hit))
+
+    id_type = dict(df.dtypes)["doc_id"]
+    return df.select("doc_id", "text").mapInArrow(run, f"doc_id {id_type}, {schema}")
+
+
+def contamination_from_catalog(df: DataFrame, catalog: DataFrame, k: int = 8) -> DataFrame:
     """:func:`contamination_stats` against a PERSISTED gram catalog
     (the incremental form: new crawl batch vs the merged catalog of
-    every benchmark suite ingested so far). ``k`` must equal the
-    catalog's shingle length — grams of a different length can never
-    match and everything would silently read clean, so the catalog
-    side ENFORCES it in-plan (ADVICE r7): every catalog shingle is
-    asserted to have exactly ``k`` space-joined tokens while the
-    broadcast relation is built — zero extra jobs, and a stale or
-    mis-parameterized catalog fails loudly instead of passing."""
-    sh = _doc_kgram_counts(df, k, id_col, text_col)
-    # the assertion rides the _hit payload column, NOT the join key:
-    # wrapping the key itself changed the projection's statistics and
-    # degraded the downstream per-doc join in the static plan
-    # (pinned by tests/test_plans.py)
-    hit_checked = F.when(
-        F.size(F.split(F.col("shingle"), F.lit(" "), F.lit(-1))) != F.lit(k),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"contamination_from_catalog: catalog shingle is not a "
-                    f"{k}-gram (k mismatch between catalog and query): "
-                ),
-                F.col("shingle"),
-            ).cast("string"),
-        ).cast("int"),
-    ).otherwise(F.lit(1))
-    marked = sh.join(
-        F.broadcast(
-            catalog.select("shingle").withColumn("_hit", hit_checked)
-        ),
-        "shingle",
-        "left",
-    )
-    # per-doc kernel rows carry the occurrence count n: occurrences
-    # are sum(n), and a doc with no hit sums to 0, not NULL
-    per_doc = marked.groupBy("doc_id").agg(
-        F.sum("n").alias("n_kgrams"),
-        F.sum(F.when(F.col("_hit").isNotNull(), F.col("n")).otherwise(0)).alias(
-            "n_contaminated"
-        ),
-    )
-    all_docs = df.select(F.col(id_col).alias("doc_id")).distinct()
-    return (
-        all_docs.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_kgrams"), F.lit(0)).cast("bigint").alias(
-                "n_kgrams"
-            ),
-            F.coalesce(F.col("n_contaminated"), F.lit(0))
-            .cast("bigint")
-            .alias("n_contaminated"),
-            F.when(
-                F.coalesce(F.col("n_kgrams"), F.lit(0)) > 0,
-                F.col("n_contaminated") / F.col("n_kgrams").cast("double"),
-            ).alias("contamination_frac"),
-        )
-    )
+    every benchmark suite ingested so far). The catalog is collected
+    and checked on the driver (:func:`_collect_catalog`) and shipped
+    to the row-local scorer, so the training side has no join and no
+    shuffle.
+
+    One output row per input row, like ``doc_feature_counts``'
+    precondition: a ``doc_id`` on two rows is scored once per row,
+    never merged."""
+    import numpy as np
+    import pyarrow as pa
+
+    shingles = _collect_catalog(catalog.select("shingle").toArrow()["shingle"], k)
+
+    def stats(batch, rows, hit):
+        n_kgrams = np.bincount(rows, minlength=batch.num_rows)
+        n_hit = np.bincount(rows[hit >= 0], minlength=batch.num_rows)
+        frac = n_hit / np.maximum(n_kgrams, 1)
+        return {
+            "doc_id": batch.column(0),
+            "n_kgrams": n_kgrams,
+            "n_contaminated": n_hit,
+            "contamination_frac": pa.array(frac, mask=n_kgrams == 0),
+        }
+
+    schema = "n_kgrams bigint, n_contaminated bigint, contamination_frac double"
+    return _score_against(df, shingles, k, stats, schema)
 
 
-def contamination_by_benchmark(
-    df: DataFrame,
-    benchmark: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str = "doc_id",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def contamination_by_benchmark(df: DataFrame, benchmark: DataFrame, k: int = 8) -> DataFrame:
     """Contamination ATTRIBUTION: ``(doc_id, bench_doc,
     n_overlap_kgrams)`` — which benchmark document each contaminated
-    span came from, one row per (training doc, benchmark doc) pair
-    with >= 1 shared k-gram occurrence. The per-benchmark
-    decontamination report :func:`contamination_stats` cannot give
-    (its broadcast set is anonymous): summing ``n_overlap_kgrams``
-    over ``bench_doc`` >= that doc's ``n_contaminated`` (a training
-    k-gram hitting two benchmark docs counts once per bench doc
-    here, once total there).
+    span came from, one row per (training row, benchmark doc) pair
+    with >= 1 shared k-gram occurrence: the per-benchmark report
+    :func:`contamination_stats` cannot give. A k-gram in two benchmark
+    docs counts once per bench doc here, once there.
 
-    Scale shape: identical to ``contamination_stats`` with ONE extra
-    key on the broadcast side — the benchmark (shingle, doc) pairs
-    are still benchmark-sized (distinct), broadcast under AQE; the
-    corpus side is one shingle pass + broadcast join + one groupBy on
-    (doc_id, bench_doc)."""
-    sh = _doc_kgram_counts(df, k, id_col, text_col)
-    bsh = _doc_kgram_counts(benchmark, k, bench_id_col, bench_text_col).select(
-        F.col("doc_id").alias("bench_doc"), "shingle"
-    )
-    return (
-        sh.join(F.broadcast(bsh), "shingle")
-        .groupBy("doc_id", "bench_doc")
-        .agg(F.sum("n").alias("n_overlap_kgrams"))
-    )
+    The catalog and a CSR table from catalog index to benchmark docs
+    are collected on the driver; the row-local scorer expands each hit
+    through it and counts (row, bench doc) pairs with ``np.unique``.
+    As in :func:`contamination_from_catalog`, rows are never merged."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    pairs = _doc_kgram_counts(benchmark, k, "doc_id", "text").toArrow()
+    catalog = _collect_catalog(pairs["shingle"], k)
+    bench_ids = pc.unique(pairs["doc_id"])
+    n_bench = max(len(bench_ids), 1)
+    gram_at = pc.index_in(pairs["shingle"], value_set=catalog).to_numpy()
+    bench_at = pc.index_in(pairs["doc_id"], value_set=bench_ids).to_numpy()
+    # the distinct (shingle, bench doc) pairs, grouped by shingle
+    pair = np.unique(gram_at.astype(np.int64) * n_bench + bench_at)
+    gram, owner = np.divmod(pair, n_bench)
+    offsets = np.zeros(len(catalog) + 1, np.int64)
+    np.cumsum(np.bincount(gram, minlength=len(catalog)), out=offsets[1:])
+
+    def attribution(batch, rows, hit):
+        rows, hit = rows[hit >= 0], hit[hit >= 0]
+        fan = offsets[hit + 1] - offsets[hit]
+        # hit j's owners are owner[offsets[hit[j]]:offsets[hit[j] + 1]]
+        at = np.repeat(offsets[hit] - np.cumsum(fan) + fan, fan) + np.arange(fan.sum())
+        key = np.repeat(rows, fan) * n_bench + owner[at]
+        key, n = np.unique(key, return_counts=True)
+        rows, bench = np.divmod(key, n_bench)
+        return {
+            "doc_id": batch.column(0).take(pa.array(rows)),
+            "bench_doc": bench_ids.take(pa.array(bench)),
+            "n_overlap_kgrams": n,
+        }
+
+    schema = f"bench_doc {dict(benchmark.dtypes)['doc_id']}, n_overlap_kgrams bigint"
+    return _score_against(df, catalog, k, attribution, schema)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -84,49 +84,15 @@ def streaming_contamination(
     benchmark: DataFrame,
     k: int = 5,
 ) -> DataFrame:
-    """Benchmark-contamination stats over a stream — the broadcast
-    side (the benchmark's DISTINCT k-gram set) is collected ONCE at
-    plan build (bounded: benchmarks are thousands of docs by
-    definition) and shipped in the Arrow-pass closure; each arriving
-    document is scored row-locally, so the operator stays stateless
-    (no stream-side groupBy, no state store) and emits the SAME
-    ``(doc_id, n_kgrams, n_contaminated, contamination_frac)`` rows
-    as the batch ``contamination_stats`` on the same files."""
-    from collections.abc import Iterator
+    """Benchmark-contamination stats over a stream: the batch
+    ``contamination_stats`` on the stream source verbatim. Its
+    benchmark catalog is collected once at plan build and scored
+    row-locally, so the operator stays stateless (no stream-side
+    groupBy, no state store) and emits the SAME rows, one per input
+    row, as the batch operator on the same files."""
+    from textalyzer_spark.operators.dedup import contamination_stats
 
-    import pandas as pd
-
-    from textalyzer_spark.operators.dedup import benchmark_gram_catalog
-
-    bench = {r["shingle"] for r in benchmark_gram_catalog(benchmark, k).collect()}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from textalyzer_spark.functions.tokenize import kgrams, tokenize_text
-
-        for pdf in batches:
-            ids, n_kg, n_ct, frac = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                grams = kgrams(tokenize_text(text or ""), k)
-                n = len(grams)
-                hits = sum(1 for g in grams if g in bench)
-                ids.append(doc_id)
-                n_kg.append(n)
-                n_ct.append(hits)
-                frac.append(hits / n if n > 0 else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_kgrams": n_kg,
-                    "n_contaminated": n_ct,
-                    "contamination_frac": frac,
-                }
-            )
-
-    return _stream(spark, input_dir).mapInPandas(
-        run,
-        "doc_id string, n_kgrams bigint, n_contaminated bigint, "
-        "contamination_frac double",
-    )
+    return contamination_stats(_stream(spark, input_dir), benchmark, k)
 
 
 def streaming_first_seen(spark: SparkSession, input_dir: str) -> DataFrame:
